@@ -69,7 +69,8 @@ def build_arg_parser() -> argparse.ArgumentParser:
         "--text-input", action="store_true",
         help="treat --input as raw .log text files (the reference's stdin "
              "mode, src/bin/redeye.rs:82) instead of a tokenized parquet "
-             "table; lines are tokenized on the fly, doc_id = file#line_no",
+             "table; the parse tasks read and number the lines themselves, "
+             "doc_id = file#line_no",
     )
     p.add_argument("--master", default=None, help="override master (tests); omit under spark-submit")
     return p
@@ -96,9 +97,11 @@ def main(argv: list[str] | None = None) -> int:
         )
     cfg = PipelineConfig(
         fmt=FORMAT_COMBINED if args.combined_format else FORMAT_COMMON,
-        # text mode defaults to a round-robin spread: after the per-file
-        # numbering window, every line of a file sits on ONE reducer, so
-        # an unspread parse would run single-core per file
+        # text mode: the parse task count. Local uncompressed files are
+        # cut into this many byte ranges, each read by its parse task;
+        # other text files (.gz, object stores) are numbered by a per-file
+        # window that holds each file on ONE reducer, and their lines are
+        # spread round-robin over this many tasks
         num_partitions=args.parallelism
         or (spark.sparkContext.defaultParallelism if args.text_input else None),
         bucket_granularity=args.bucket,
@@ -111,20 +114,22 @@ def main(argv: list[str] | None = None) -> int:
 
         from redeye_spark.functions.grok import grok_extract
 
+        width = args.parallelism or spark.sparkContext.defaultParallelism
         if args.text_input:
             # straight to the line strings — tokenizing and immediately
             # detokenizing would cost two full Python exchanges for
-            # nothing (grok extracts from the line JVM-side)
+            # nothing (grok extracts from the line JVM-side); local files
+            # are already read by `width` tasks, other files need a spread
             from redeye_spark.operators.tokenize_op import text_lines_df
+            from redeye_spark.sources.textfiles import tagged
 
-            lines = text_lines_df(spark, args.input)
+            lines = text_lines_df(spark, args.input, width)
+            if tagged(lines)[0] is None:
+                lines = lines.repartition(width)
         else:
             from redeye_spark.operators.tokenize_op import detokenize_lines
 
-            lines = detokenize_lines(spark.read.parquet(args.input))
-        lines = lines.repartition(
-            args.parallelism or spark.sparkContext.defaultParallelism
-        )
+            lines = detokenize_lines(spark.read.parquet(args.input)).repartition(width)
         extracted = grok_extract(lines, args.grok, keep=["doc_id", "source"])
         io.write(extracted, "events_grok")
         back = io.read(spark, "events_grok")
@@ -164,12 +169,16 @@ def main(argv: list[str] | None = None) -> int:
             spark, raw, io, args.checkpoint_dir, cfg,
             n_chunks=args.chunks, chunk_by=args.chunk_by,
         )
-        chunks = manifest["chunks"].values()
+        chunks = list(manifest["chunks"].values())
         stats = {
             "rows_in": sum(c["rows_in"] for c in chunks),
             "rows_ok": sum(c["rows_ok"] for c in chunks),
             "rows_err": sum(c["rows_err"] for c in chunks),
             "chunks": len(chunks),
+            # every chunk filters the input, so all take one path; a
+            # manifest from before this field existed reports none
+            "parse_path": chunks[0].get("parse_path") if chunks else None,
+            "fallback_reason": chunks[0].get("fallback_reason") if chunks else None,
         }
     else:
         res = run_pipeline(spark, raw, io, cfg)
@@ -179,6 +188,8 @@ def main(argv: list[str] | None = None) -> int:
             "rows_err": res.rows_err,
             "sinks": res.sink_rows,
             "wall_sec": round(res.wall_sec, 3),
+            "parse_path": res.parse_path,
+            "fallback_reason": res.fallback_reason,
         }
 
     if args.json_sink:

@@ -236,17 +236,18 @@ def minhash_lsh_pairs(
     """
     rows_per_band = num_perm // bands
     sigs = minhash_signatures(df, id_col, text_col, num_perm, shingle_k, seed)
-    # Materialize the signatures behind ONE explicit exchange. The
-    # banding self-join's l/r branches and the bucket-size aggregate
-    # each re-plan the whole signature subtree (4 static MapInPandas
-    # nodes; 3 survived runtime exchange reuse), so the Python
-    # shingle+permute pass over the corpus ran three times per query.
-    # With a round-robin shuffle on the (id, signature) proxy
-    # (~num_perm*8 B/row — far under the text bytes, the "shuffle the
-    # lightweight proxy" trade) every branch is an identical Exchange
-    # over the same child, AQE reuses one shuffle output, and the
-    # Python pass runs once. Signatures are a pure per-row function, so
-    # the result is partitioning-invariant.
+    # Put the signatures behind ONE explicit exchange. The banding
+    # self-join's l/r branches and the bucket-size aggregate each
+    # re-plan the whole signature subtree (4 static MapInPandas nodes;
+    # 3 survived runtime exchange reuse), so the Python shingle+permute
+    # pass over the corpus ran three times per query. With a round-robin
+    # shuffle on the (id, signature) proxy (~num_perm*8 B/row — far
+    # under the text bytes, the "shuffle the lightweight proxy" trade)
+    # the self-join's l/r branches become identical Exchanges over the
+    # same child and share one shuffle output, so the pass runs twice,
+    # not three times: the bucket-size aggregate still materializes its
+    # own copy across the broadcast boundary. Signatures are a pure
+    # per-row function, so the result is partitioning-invariant.
     sigs = sigs.repartition(df.sparkSession.sparkContext.defaultParallelism)
     banded = sigs.select(
         F.col(id_col),

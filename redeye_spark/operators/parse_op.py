@@ -1,22 +1,155 @@
-"""The parse operator: tokenized sequences -> parsed events.
+"""The parse operator: log lines -> parsed events in one Python hop.
 
-One mapInPandas exchange does detokenize + regex parse + error classify
-(Arrow-batched; the only Python hop in the whole plan — everything before
-it is a columnar scan, everything after is JVM-side Catalyst). This
-lifts the reference's per-line loop (src/bin/redeye.rs:82-89) into a
-single vectorized distributed operator.
+One mapInArrow call reads lines from a pluggable source, then regex
+parses and error-classifies them, Arrow-batched, so every input shape
+crosses the JVM<->Python boundary exactly once. This lifts the
+reference's per-line loop (src/bin/redeye.rs:82-89) into a single
+vectorized distributed operator. Sources:
+
+  token_column    (doc_id, tokens, n_tok, source) rows from any plan
+  parquet_files   the same shape read by the worker from local parquet
+  string_column   (doc_id, source, line) rows from any plan
+  text files      raw .log files read, split and numbered by the worker
+                  (sources.textfiles.line_source)
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..functions.logparse import FORMAT_COMMON, parse_lines
-from ..functions.tokens import detokenize, tokens_equal
+from ..functions.logparse import FORMAT_COMMON
+from ..functions.tokens import tokens_equal
 from ..schema import parsed_schema
+
+# (frame the mapInArrow runs over, worker-side function from its input
+# batches to (doc_id, source, line, tokens-or-None) Arrow arrays)
+LineSource = tuple[DataFrame, Callable[[Iterator], Iterator[tuple]]]
+
+
+def token_column(df: DataFrame, num_partitions: int | None = None) -> LineSource:
+    """Lines detokenized from the ``tokens`` column of (doc_id, tokens,
+    n_tok, source) rows.
+
+    num_partitions: explicit round-robin repartition BEFORE the UDF so the
+    Python workers see even batches regardless of input-file skew (north
+    rule: explicit repartitioning). Round-robin, not by `source` — the
+    hot-source key must never become the partitioning key of the parse
+    stage."""
+    if num_partitions:
+        df = df.repartition(num_partitions)
+
+    def read(batches):
+        from ..functions.tokens import detokenize_list_array
+
+        for b in batches:
+            # zero-copy byte carve from the list buffer
+            toks = b.column("tokens")
+            yield b.column("doc_id"), b.column("source"), detokenize_list_array(toks), toks
+
+    return df, read
+
+
+def string_column(df: DataFrame, num_partitions: int | None = None) -> LineSource:
+    """Lines straight from the ``line`` column of (doc_id, source, line)
+    rows: no token array ever crosses the boundary."""
+    if num_partitions:
+        df = df.repartition(num_partitions)
+
+    def read(batches):
+        for b in batches:
+            yield b.column("doc_id"), b.column("source"), b.column("line"), None
+
+    return df, read
+
+
+def parquet_files(spark, files: list[str], batch_rows: int = 10_000) -> LineSource:
+    """Columnar-source lines (guide §8 'read your own slice'): each task
+    reads whole parquet files of the input shape with pyarrow, so the
+    token arrays go parquet -> Arrow -> parse with ZERO JVM row
+    materialization (measured: the JVM->Python round trip of the token
+    column costs ~2x the parse kernel itself)."""
+    # one file index per partition via a natively-partitioned range —
+    # no exchange at all (a repartition here cost a 2-stage AQE job per
+    # action; a python-RDD parallelize cost a pickled-RDD python round
+    # trip per task — both measured and removed). The path list rides
+    # the task binary (broadcast once per stage). Deterministic under
+    # retry: each task re-reads the same file.
+    file_list = list(files)
+    frame = spark.range(0, len(file_list), 1, len(file_list))
+
+    def read(batches):
+        import pyarrow.parquet as _pq
+
+        from ..functions.tokens import detokenize_list_array
+
+        for b in batches:
+            for path in (file_list[i] for i in b.column(0).to_pylist()):
+                for rb in _pq.ParquetFile(path).iter_batches(
+                    batch_size=batch_rows, columns=["doc_id", "tokens", "source"]
+                ):
+                    toks = rb.column(1)
+                    yield rb.column(0), rb.column(2), detokenize_list_array(toks), toks
+
+    return frame, read
+
+
+def parse(
+    source: LineSource,
+    fmt: str = FORMAT_COMMON,
+    carry_tokens: bool = True,
+    validate: bool = False,
+) -> DataFrame:
+    """The parse operator: a line source -> parsed-event rows.
+
+    carry_tokens=False prunes the token array immediately after the parse:
+    at 10^12 rows the raw bytes dominate width, and Catalyst cannot prune
+    columns *through* a Python boundary, so the choice happens here.
+    Sources without a token column build it from the line bytes (one
+    int32 token per UTF-8 byte, so detokenize(tokenize(line)) == line and
+    the rows are identical whichever shape the input had).
+
+    validate=True appends the token_ok invariant column
+    (retokenize(message) == tokens, FIXTURES §3.1) in the same hop —
+    the standalone ``validate_tokens`` pass ships the full parsed frame
+    through Python a second time just to compare two byte buffers.
+    """
+    from pyspark.sql import types as T
+
+    frame, read = source
+    schema = parsed_schema(carry_tokens)
+    if validate:
+        schema = T.StructType(schema.fields + [T.StructField("token_ok", T.BooleanType())])
+    names = [f.name for f in schema.fields]
+
+    def fn(batches):
+        import pyarrow as _pa
+
+        from ..functions.logparse import parse_lines_arrow
+        from ..functions.tokens import tokens_equal_arrow, tokens_list_from_string_array
+
+        # One compute thread per worker: task-level parallelism already
+        # fills the cores; 32 workers x default 32-thread arrow pools
+        # oversubscribe catastrophically.
+        _pa.set_cpu_count(1)
+        token_type = _pa.list_(_pa.int32())
+        for doc_id, src, lines, toks in read(batches):
+            if len(lines) == 0:
+                continue
+            cols = parse_lines_arrow(lines, fmt)
+            arrays = [doc_id, src]
+            if toks is None and (carry_tokens or validate):
+                toks = tokens_list_from_string_array(lines)
+            if carry_tokens:
+                arrays.append(toks if toks.type == token_type else toks.cast(token_type))
+            arrays.extend(cols.values())
+            if validate:
+                arrays.append(_pa.array(tokens_equal_arrow(cols["message"], toks)))
+            yield _pa.RecordBatch.from_arrays(arrays, names)
+
+    return frame.mapInArrow(fn, schema=schema)
 
 
 def parse_sequences(
@@ -25,96 +158,8 @@ def parse_sequences(
     carry_tokens: bool = True,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """(doc_id, tokens, n_tok, source) -> parsed-event rows.
-
-    num_partitions: explicit round-robin repartition BEFORE the UDF so the
-    Python workers see even batches regardless of input-file skew (north
-    rule: explicit repartitioning). Round-robin, not by `source` — the
-    hot-source key must never become the partitioning key of the parse
-    stage.
-
-    carry_tokens=False prunes the token array immediately after the parse:
-    at 10^12 rows the raw bytes dominate width, and Catalyst cannot prune
-    columns *through* a mapInPandas boundary, so the choice happens here.
-    """
-    if num_partitions:
-        df = df.repartition(num_partitions)
-
-    schema = parsed_schema(carry_tokens)
-    names = [f.name for f in schema.fields]
-
-    def fn(batches):
-        import pyarrow as _pa
-
-        from ..functions.logparse import parse_lines_arrow
-        from ..functions.tokens import detokenize_list_array
-
-        # One compute thread per worker: task-level parallelism already
-        # fills the cores; 32 workers x default 32-thread arrow pools
-        # oversubscribe catastrophically.
-        _pa.set_cpu_count(1)
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            toks = b.column(b.schema.get_field_index("tokens"))
-            # zero-copy byte carve from the list buffer: the pandas path
-            # allocated one ndarray per row just to re-flatten them
-            lines = detokenize_list_array(toks)
-            cols = parse_lines_arrow(lines, fmt)
-            arrays = [
-                b.column(b.schema.get_field_index("doc_id")),
-                b.column(b.schema.get_field_index("source")),
-            ]
-            if carry_tokens:
-                arrays.append(toks)
-            arrays.extend(cols.values())
-            yield _pa.RecordBatch.from_arrays(arrays, names)
-
-    return df.mapInArrow(fn, schema=schema)
-
-
-def parquet_scan_files(df: DataFrame) -> list[str] | None:
-    """If ``df`` is a bare, local, batch parquet scan of the
-    RAW_SEQUENCES shape (no filters/projections/limits on top), return
-    its data-file paths; else None.
-
-    This powers the columnar-source fast path below: Spark's
-    JVM-row -> Arrow conversion of the token column (one loop iteration
-    per token element) costs more than the parse itself, and it is pure
-    overhead when the source is already columnar parquet the Python
-    worker could read directly. The detection is deliberately
-    conservative — anything but the exact pattern falls back to the
-    general ``parse_sequences`` path.
-    """
-    from ..schema import RAW_SEQUENCES
-
-    if df.isStreaming:
-        return None
-    if [f.name for f in df.schema.fields] != [f.name for f in RAW_SEQUENCES.fields]:
-        return None
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan()
-        if plan.getClass().getSimpleName() != "LogicalRelation":
-            return None
-        if "Parquet" not in plan.relation().fileFormat().toString():
-            return None
-        files = list(df.inputFiles())
-    except Exception:
-        return None
-    if len(files) > 200_000:
-        # a millions-of-files table would make the driver-built paths
-        # relation itself the bottleneck; the general scan path handles
-        # that case (and compaction is the real fix)
-        return None
-    paths = []
-    for f in files:
-        if f.startswith("file://"):
-            paths.append(f[len("file://"):])
-        elif f.startswith("/"):
-            paths.append(f)
-        else:  # object store / non-local scheme: stay on the general path
-            return None
-    return paths or None
+    """(doc_id, tokens, n_tok, source) -> parsed-event rows."""
+    return parse(token_column(df, num_partitions), fmt, carry_tokens)
 
 
 def parse_sequence_files(
@@ -124,51 +169,9 @@ def parse_sequence_files(
     carry_tokens: bool = True,
     batch_rows: int = 10_000,
 ) -> DataFrame:
-    """Columnar-source parse (guide §8 'read your own slice'): each task
-    reads its parquet files with pyarrow and parses them, so the token
-    arrays go parquet -> Arrow -> parse with ZERO JVM row
-    materialization (measured: the JVM->Python round trip of the token
-    column costs ~2x the parse kernel itself). Output rows are
-    identical to scan -> parse_sequences; only the task boundary moves
-    from byte splits to whole files (the corpus writer's ~100k-row
-    chunks), which at any scale still gives several waves per slot."""
-    schema = parsed_schema(carry_tokens)
-    names = [f.name for f in schema.fields]
-    # one file index per partition via a natively-partitioned range —
-    # no exchange at all (a repartition here cost a 2-stage AQE job per
-    # action; a python-RDD parallelize cost a pickled-RDD python round
-    # trip per task — both measured and removed). The path list rides
-    # the task binary (broadcast once per stage). Deterministic under
-    # retry: each task re-reads the same file.
-    file_list = list(files)
-    pdf = spark.range(0, len(file_list), 1, len(file_list))
-
-    def fn(batches):
-        import pyarrow as _pa
-        import pyarrow.parquet as _pq
-
-        from ..functions.logparse import parse_lines_arrow
-        from ..functions.tokens import detokenize_list_array
-
-        _pa.set_cpu_count(1)
-        for b in batches:
-            for path in (file_list[i] for i in b.column(0).to_pylist()):
-                pf = _pq.ParquetFile(path)
-                for rb in pf.iter_batches(
-                    batch_size=batch_rows, columns=["doc_id", "tokens", "source"]
-                ):
-                    if rb.num_rows == 0:
-                        continue
-                    toks = rb.column(1)
-                    lines = detokenize_list_array(toks)
-                    cols = parse_lines_arrow(lines, fmt)
-                    arrays = [rb.column(0), rb.column(2)]
-                    if carry_tokens:
-                        arrays.append(toks.cast(_pa.list_(_pa.int32())))
-                    arrays.extend(cols.values())
-                    yield _pa.RecordBatch.from_arrays(arrays, names)
-
-    return pdf.mapInArrow(fn, schema=schema)
+    """Parquet files of the input shape -> parsed-event rows, the same
+    rows as scan -> parse_sequences with whole files as task units."""
+    return parse(parquet_files(spark, files, batch_rows), fmt, carry_tokens)
 
 
 def parse_raw_lines(
@@ -178,68 +181,61 @@ def parse_raw_lines(
     num_partitions: int | None = None,
     validate: bool = False,
 ) -> DataFrame:
-    """(doc_id, source, line) -> parsed-event rows in ONE Python hop.
+    """(doc_id, source, line) -> parsed-event rows, identical to
+    ``tokenize_lines(df)`` piped through ``parse_sequences`` without the
+    token array ever crossing the JVM<->Python boundary mid-pipeline."""
+    return parse(string_column(df, num_partitions), fmt, carry_tokens, validate)
 
-    Semantically identical to ``tokenize_lines(df)`` piped through
-    ``parse_sequences``: the tokenizer is one int32 token per UTF-8 byte,
-    so ``detokenize(tokenize(line)) == line`` byte-for-byte and parsing
-    the original line is exact. Fusing the two operators keeps the token
-    array from ever crossing the JVM<->Python boundary mid-pipeline
-    (guide §4: the tokenize->exchange->detokenize round trip shipped the
-    fattest column twice); tokens are still built by the same
-    ``tokens_list_array`` kernel when carried or validated.
 
-    validate=True appends the token_ok invariant column
-    (retokenize(message) == tokens, FIXTURES §3.1) in the same hop —
-    the standalone ``validate_tokens`` pass ships the full parsed frame
-    through Python a second time just to compare two byte buffers.
+def parquet_scan(df: DataFrame) -> tuple[list[str] | None, str | None]:
+    """(data-file paths, None) if ``df`` is a bare, local, batch parquet
+    scan of the RAW_SEQUENCES shape (no filters/projections/limits on
+    top); else (None, why not).
+
+    This powers the ``parquet_files`` fast path. The detection is
+    deliberately conservative — anything but the exact pattern falls
+    back to the general ``token_column`` path.
     """
-    from pyspark.sql import types as T
+    from py4j.protocol import Py4JError
 
-    if num_partitions:
-        df = df.repartition(num_partitions)
+    from ..schema import RAW_SEQUENCES
 
-    schema = parsed_schema(carry_tokens)
-    if validate:
-        schema = T.StructType(
-            schema.fields + [T.StructField("token_ok", T.BooleanType())]
-        )
-    names = [f.name for f in schema.fields]
-
-    def fn(batches):
-        import pyarrow as _pa
-
-        from ..functions.logparse import parse_lines_arrow
-        from ..functions.tokens import (
-            tokens_equal_arrow,
-            tokens_list_from_string_array,
-        )
-
-        _pa.set_cpu_count(1)
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            lines = b.column(b.schema.get_field_index("line"))
-            cols = parse_lines_arrow(lines, fmt)
-            arrays = [
-                b.column(b.schema.get_field_index("doc_id")),
-                b.column(b.schema.get_field_index("source")),
-            ]
-            toks = None
-            if carry_tokens or validate:
-                toks = tokens_list_from_string_array(lines)
-            if carry_tokens:
-                arrays.append(toks)
-            arrays.extend(cols.values())
-            if validate:
-                arrays.append(
-                    _pa.array(tokens_equal_arrow(cols["message"], toks))
-                )
-            yield _pa.RecordBatch.from_arrays(arrays, names)
-
-    return df.mapInArrow(fn, schema=schema)
+    if df.isStreaming:
+        return None, "streaming input"
+    if [f.name for f in df.schema.fields] != [f.name for f in RAW_SEQUENCES.fields]:
+        return None, "columns are not (doc_id, tokens, n_tok, source)"
+    try:
+        plan = df._jdf.queryExecution().optimizedPlan()
+        node = plan.getClass().getSimpleName()
+        if node != "LogicalRelation":
+            return None, f"plan root is {node}, not a file scan"
+        file_format = plan.relation().fileFormat().toString()
+        if "Parquet" not in file_format:
+            return None, f"not a parquet scan ({file_format})"
+        files = list(df.inputFiles())
+    except (AttributeError, Py4JError) as e:
+        return None, f"plan inspection failed: {type(e).__name__}: {str(e).splitlines()[0] if str(e) else ''}"
+    if len(files) > 200_000:
+        # a millions-of-files table would make the driver-built paths
+        # relation itself the bottleneck; the general scan path handles
+        # that case (and compaction is the real fix)
+        return None, f"{len(files)} files, over the 200000-file limit"
+    paths = []
+    for f in files:
+        if f.startswith("file://"):
+            paths.append(f[len("file://"):])
+        elif f.startswith("/"):
+            paths.append(f)
+        else:  # object store / non-local scheme: stay on the general path
+            return None, f"non-local file {f}"
+    if not paths:
+        return None, "no input files"
+    return paths, None
 
 
+def parquet_scan_files(df: DataFrame) -> list[str] | None:
+    """``parquet_scan`` without the reason."""
+    return parquet_scan(df)[0]
 def validate_tokens(parsed: DataFrame) -> DataFrame:
     """Append token_ok: retokenize(message) == tokens (FIXTURES §3.1).
 

@@ -1,9 +1,11 @@
-"""Line -> token-array operator (inverse of the parse path's detokenize).
+"""Line <-> token-array operators and the raw .log readers.
 
-Used to materialize the pipeline's input shape (BASELINE.json input_hint)
-from any DataFrame that carries raw line strings — e.g. the entry queries
-that derive deterministic log lines from the testdata `events` table.
-Arrow-batched; byte-level work is vectorized in functions.tokens.
+tokenize_lines materializes the pipeline's input shape (BASELINE.json
+input_hint) from any DataFrame that carries raw line strings — e.g. the
+entry queries that derive deterministic log lines from the testdata
+`events` table. read_text_lines / text_lines_df read .log files in the
+Python worker (sources.textfiles) into the same shapes. Arrow-batched;
+byte-level work is vectorized in functions.tokens.
 """
 
 from __future__ import annotations
@@ -12,10 +14,15 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, types as T
 
-from ..functions.tokens import tokens_list_array
+from ..functions.tokens import tokens_list_array, tokens_list_from_string_array
 from ..schema import RAW_SEQUENCES
+from ..sources import textfiles
+
+# text_lines_df's shape
+LINES = T.StructType([T.StructField(c, T.StringType(), False) for c in ("doc_id", "source", "line")])
 
 
 def tokenize_lines(df: DataFrame, line_col: str = "line") -> DataFrame:
@@ -44,7 +51,40 @@ def tokenize_lines(df: DataFrame, line_col: str = "line") -> DataFrame:
     return df.mapInPandas(fn, schema=RAW_SEQUENCES)
 
 
-def text_lines_df(spark, path: str) -> DataFrame:
+def _emit_lines(doc_id, source, lines) -> pa.RecordBatch:
+    return pa.RecordBatch.from_arrays([doc_id, source, lines], ["doc_id", "source", "line"])
+
+
+def _emit_tokens(doc_id, source, lines) -> pa.RecordBatch:
+    toks = tokens_list_from_string_array(lines)
+    n_tok = pa.array(np.diff(toks.offsets.to_numpy()).astype(np.int32))
+    return pa.RecordBatch.from_arrays(
+        [doc_id, toks, n_tok, source], ["doc_id", "tokens", "n_tok", "source"]
+    )
+
+
+def _read_text(spark, path, num_tasks, schema, emit, fallback) -> DataFrame:
+    """Local uncompressed files: a mapInArrow over ``num_tasks`` byte
+    ranges (sources.textfiles), ``emit`` shaping each (doc_id, source,
+    line) batch. Other files: ``fallback`` over Spark's text scan and
+    the numbering window. The frame is marked either way (textfiles.tag)."""
+    files, reason = textfiles.list_text_files(spark, path)
+    if files is None:
+        df = fallback(number_text_lines(textfiles.text_scan(spark, path)))
+    else:
+        frame, read = textfiles.line_source(
+            spark, files, num_tasks or spark.sparkContext.defaultParallelism
+        )
+
+        def fn(batches):
+            for doc_id, source, lines, _ in read(batches):
+                yield emit(doc_id, source, lines)
+
+        df = frame.mapInArrow(fn, schema=schema)
+    return textfiles.tag(df, files, reason)
+
+
+def text_lines_df(spark, path: str, num_tasks: int | None = None) -> DataFrame:
     """Raw log files -> (doc_id, source, line) — line strings with
     provenance ids, NOT yet tokenized (grok-style consumers extract
     straight from the line and should not pay a tokenize+detokenize
@@ -56,27 +96,27 @@ def text_lines_df(spark, path: str) -> DataFrame:
     files live in different directories, and it points back at the
     exact file line. Numbering counts PHYSICAL lines (blank lines are
     numbered, then dropped), so `sed -n '<n>p' <file>` lands on the
-    offending record. source is the file basename. The per-file
-    numbering window holds each file's lines on one reducer — fine for
-    typical log-file sizes; split multi-GB single files upstream (text
-    has no stable ordering column to parallelize the numbering over).
-    Blank lines are dropped after numbering (the reference warns-and-
-    skips a trimmed empty line; here it carries no tokens at all)."""
-    from pyspark.sql import functions as F
+    offending record. source is the file basename. Blank lines are
+    dropped after numbering (the reference warns-and-skips a trimmed
+    empty line; here it carries no tokens at all).
 
-    raw = spark.read.text(path).select(
-        F.regexp_replace(F.input_file_name(), r"^[a-z0-9+.-]+:(//)?", "").alias("_file"),
-        F.col("value").alias("line"),
-    )
-    return number_text_lines(raw)
+    Local uncompressed files are read by ``num_tasks`` tasks (default:
+    the session's parallelism), each owning the lines that start in its
+    equal byte range of the files and numbering them itself — no
+    exchange, and a hot file spreads over every task. Other files
+    (compressed, non-local) take Spark's text scan and the per-file
+    numbering window of number_text_lines, which holds each file on
+    one reducer. Both give the same rows (sources.textfiles)."""
+    return _read_text(spark, path, num_tasks, LINES, _emit_lines, lambda df: df)
 
 
 def number_text_lines(raw: DataFrame) -> DataFrame:
     """(_file, line) -> (doc_id, source, line) with per-file physical
-    line numbering — the id/provenance step shared by the batch text
-    reader above and the streaming tail path (each micro-batch is a
-    static frame, so the same window applies there inside
-    foreachBatch)."""
+    line numbering by a window — the id/provenance step of the
+    streaming tail path (each micro-batch is a static frame, so the
+    window applies there inside foreachBatch) and of batch text input
+    that the worker-side reader does not take (compressed or
+    non-local files)."""
     from pyspark.sql import Window, functions as F
 
     w = Window.partitionBy("_file").orderBy(F.monotonically_increasing_id())
@@ -97,8 +137,14 @@ def read_text_lines(spark, path: str) -> DataFrame:
     direct analog of the reference's stdin mode (redeye.rs:82 reads
     plain text lines), for users whose corpus is .log files rather than
     a pre-tokenized table. See text_lines_df for the id/provenance
-    contract."""
-    return tokenize_lines(text_lines_df(spark, path))
+    contract; it reads with the session's parallelism in tasks.
+
+    The returned frame is marked as a text reader's output, so
+    plans.pipeline parses it in the same Python call that reads the
+    files (parse path ``text_files``) instead of tokenizing here and
+    detokenizing there. A frame derived from it (filtered, projected,
+    chunked) is an ordinary plan and takes the general parse path."""
+    return _read_text(spark, path, None, RAW_SEQUENCES, _emit_tokens, tokenize_lines)
 
 
 def detokenize_lines(df: DataFrame, keep: tuple[str, ...] = ("doc_id", "source")) -> DataFrame:

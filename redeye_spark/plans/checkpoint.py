@@ -31,7 +31,7 @@ import time
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from .pipeline import PipelineConfig, build_tagged
+from .pipeline import PipelineConfig, parse_input, tag_parsed
 from ..operators import aggregate as agg_op
 from ..operators import route as route_op
 from ..sources.io import TableIO
@@ -224,8 +224,9 @@ def run_checkpointed(
 
         # part_id records the physical parse partition per row, so the
         # manifest can carry per-partition metrics (north_rule lineage).
+        parsed, parse_path, fallback_reason = parse_input(spark, part, cfg)
         tagged = (
-            build_tagged(spark, part, cfg, source_dim)
+            tag_parsed(parsed, cfg, source_dim)
             .withColumn("chunk_id", F.lit(chunk))
             .withColumn("part_id", F.spark_partition_id())
         )
@@ -276,6 +277,8 @@ def run_checkpointed(
             "sinks": per_sink,
             "partitions": per_partition,
             "chunk_values": values[chunk] if chunk_by else None,
+            "parse_path": parse_path,
+            "fallback_reason": fallback_reason,
             "wall_sec": round(time.monotonic() - t0, 3),
             "config": {"fmt": cfg.fmt, "salt_buckets": cfg.salt_buckets},
             "completed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),

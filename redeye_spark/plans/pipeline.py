@@ -1,18 +1,24 @@
-"""End-to-end pipeline plan: scan -> repartition -> parse (one Arrow UDF)
--> broadcast enrich -> route tag -> {partitioned sink write, per-sink
-aggregate counts}.
+"""End-to-end pipeline plan: line source -> parse (one Arrow UDF)
+-> enrich -> route tag -> {partitioned sink write, per-sink aggregate
+counts}.
 
 This is the declarative analog of redeye's per-line loop
 (src/bin/redeye.rs:82-89), built so Catalyst keeps everything except the
-single mapInPandas exchange inside whole-stage codegen:
+single mapInArrow parse inside whole-stage codegen:
 
-  scan(parquet/iceberg)                  — columnar, pruned
-  repartition(n)                        — explicit, round-robin (even UDF load)
-  mapInPandas(detok+parse+classify)     — the only Python hop
-  broadcast joins ×3                    — map-side, no shuffle
+  line source                           — one of (operators.parse_op):
+    text files                            read, split and numbered by
+                                          each parse task (.log input)
+    parquet files                         read by each parse task
+    any other plan's token column         round-robin repartition(n)
+  mapInArrow(source+parse+classify)     — the only Python hop
+  enrich expressions                    — codegen, no shuffle
   tag sink (case expression)            — codegen
   write partitionBy(sink)               — single pass over the data
   groupBy(sink,bucket,keys).count()     — salted two-phase option
+
+run_pipeline reports which line source the parse took (``parse_path``)
+and, when it was the general one, why (``fallback_reason``).
 """
 
 from __future__ import annotations
@@ -27,13 +33,16 @@ from ..operators import aggregate as agg_op
 from ..operators import enrich as enrich_op
 from ..operators import parse_op
 from ..operators import route as route_op
+from ..sources import textfiles
 from ..sources.io import ParquetIO, TableIO
 
 
 @dataclass
 class PipelineConfig:
     fmt: str = FORMAT_COMMON
-    num_partitions: int | None = None  # explicit repartition before the UDF
+    # parse task count: byte ranges of text input (default: the session's
+    # parallelism), else an explicit round-robin repartition before the UDF
+    num_partitions: int | None = None
     carry_tokens: bool = False  # True only when the invariant is checked inline
     bucket_granularity: str = "hour"
     salt_buckets: int = 16
@@ -41,31 +50,51 @@ class PipelineConfig:
     routes: list = field(default_factory=lambda: list(route_op.DEFAULT_ROUTES))
 
 
-def build_tagged(
-    spark: SparkSession,
-    raw: DataFrame,
-    cfg: PipelineConfig,
-    source_dim: DataFrame | None = None,
-) -> DataFrame:
-    """raw sequences -> parsed + enriched + sink-tagged DataFrame (lazy)."""
-    # Columnar-source fast path: when `raw` is a bare local parquet scan
-    # of the input shape (the common case — and the bench corpus), each
-    # parse task reads its own files with pyarrow instead of paying
-    # Spark's per-element JVM-row->Arrow conversion of the token column
-    # (measured ~2x the parse kernel at 2 cores). Identical output rows;
-    # anything else (streaming, filtered, in-memory, non-local, explicit
-    # num_partitions request) stays on the general scan->parse path.
-    files = None
-    if cfg.num_partitions is None:
-        files = parse_op.parquet_scan_files(raw)
-    if files:
-        parsed = parse_op.parse_sequence_files(
-            spark, files, fmt=cfg.fmt, carry_tokens=cfg.carry_tokens
-        )
+def parse_input(
+    spark: SparkSession, raw: DataFrame, cfg: PipelineConfig
+) -> tuple[DataFrame, str, str | None]:
+    """raw sequences -> (parsed rows, parse path, why the general path).
+
+    The parse path is the line source parse_op.parse runs over:
+
+      text_files     ``raw`` is the unmodified frame of
+                     tokenize_op.read_text_lines over local uncompressed
+                     files: the parse tasks read, number and parse
+                     cfg.num_partitions (default: the session's
+                     parallelism) byte ranges of the files themselves;
+      parquet_files  ``raw`` is a bare local parquet scan of the input
+                     shape and no repartition was asked for: each task
+                     reads its own files with pyarrow instead of paying
+                     Spark's per-element JVM-row->Arrow conversion of the
+                     token column (measured ~2x the parse kernel);
+      general        anything else (streaming, filtered, in-memory,
+                     non-local, compressed): the token column of
+                     ``raw``'s own plan, round-robin repartitioned to
+                     cfg.num_partitions when set.
+
+    Output rows are identical whichever path is taken."""
+    source, path, reason = _line_source(spark, raw, cfg)
+    return parse_op.parse(source, fmt=cfg.fmt, carry_tokens=cfg.carry_tokens), path, reason
+
+
+def _line_source(spark: SparkSession, raw: DataFrame, cfg: PipelineConfig):
+    text = textfiles.tagged(raw)
+    if text is not None and text[0] is not None:
+        n = cfg.num_partitions or spark.sparkContext.defaultParallelism
+        return textfiles.line_source(spark, text[0], n), "text_files", None
+    if text is not None:
+        reason = f"text input: {text[1]}"
+    elif cfg.num_partitions is not None:
+        reason = f"num_partitions={cfg.num_partitions} asks for a round-robin repartition"
     else:
-        parsed = parse_op.parse_sequences(
-            raw, fmt=cfg.fmt, carry_tokens=cfg.carry_tokens, num_partitions=cfg.num_partitions
-        )
+        files, reason = parse_op.parquet_scan(raw)
+        if files:
+            return parse_op.parquet_files(spark, files), "parquet_files", None
+    return parse_op.token_column(raw, cfg.num_partitions), "general", reason
+
+
+def tag_parsed(parsed: DataFrame, cfg: PipelineConfig, source_dim: DataFrame | None = None) -> DataFrame:
+    """parsed rows -> enriched + sink-tagged rows (lazy)."""
     # Static dims (status class, ua family) are deterministic functions
     # of the row — computed as codegen expressions (value-identical to
     # the broadcast joins, see enrich_expr) instead of paying two
@@ -77,6 +106,16 @@ def build_tagged(
     return route_op.tag_routes(enriched, cfg.routes)
 
 
+def build_tagged(
+    spark: SparkSession,
+    raw: DataFrame,
+    cfg: PipelineConfig,
+    source_dim: DataFrame | None = None,
+) -> DataFrame:
+    """raw sequences -> parsed + enriched + sink-tagged DataFrame (lazy)."""
+    return tag_parsed(parse_input(spark, raw, cfg)[0], cfg, source_dim)
+
+
 @dataclass
 class PipelineResult:
     rows_in: int
@@ -84,6 +123,8 @@ class PipelineResult:
     rows_err: int
     sink_rows: dict[str, int]
     wall_sec: float
+    parse_path: str = "general"  # text_files | parquet_files | general
+    fallback_reason: str | None = None  # why the parse took the general path
 
 
 def run_pipeline(
@@ -107,7 +148,8 @@ def run_pipeline(
     # UDF runs exactly once (the sink write); the aggregate pass re-reads
     # the columnar sink with column pruning (5 narrow columns), which at
     # any scale beats caching the full wide stream on-heap.
-    tagged = build_tagged(spark, raw, cfg, source_dim)
+    parsed, parse_path, fallback_reason = parse_input(spark, raw, cfg)
+    tagged = tag_parsed(parsed, cfg, source_dim)
     # Per-sink counters ride the sink-write job itself via df.observe —
     # zero extra jobs (previously a third job re-read the agg table to
     # sum them). Observation aggregates can't groupBy, but the route
@@ -214,4 +256,6 @@ def run_pipeline(
         rows_err=rows_err,
         sink_rows=per_sink,
         wall_sec=time.monotonic() - t0,
+        parse_path=parse_path,
+        fallback_reason=fallback_reason,
     )

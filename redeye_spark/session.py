@@ -68,25 +68,95 @@ def _local_dir() -> str | None:
     return None
 
 
+_GIB = 1 << 30
+# resident memory a Python worker may need on top of the driver heap
+# (Arrow batches of ~10k wide rows, numpy temporaries, the interpreter)
+PY_WORKER_BYTES = _GIB // 2
+
+
+def host_cores() -> int:
+    """CPUs this process may run on — what `nproc` reports, without its
+    OMP_NUM_THREADS override."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # not Linux
+        return os.cpu_count() or 1
+
+
+def host_memory_bytes() -> int | None:
+    """RAM this process may use: MemTotal, capped by a cgroup limit
+    (v2 memory.max or v1 memory.limit_in_bytes); None if unknown."""
+    limits = []
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    limits.append(int(line.split()[1]) * 1024)
+                    break
+    except OSError:
+        pass
+    for path in ("/sys/fs/cgroup/memory.max", "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(path) as f:
+                value = f.read().strip()
+        except OSError:
+            continue
+        if value.isdigit():
+            limits.append(int(value))
+    return min(limits) if limits else None
+
+
+def parse_memory(spec: str) -> int:
+    """A JVM memory size ("3g", "512m", "1024k", bytes) in bytes."""
+    units = {"k": 1 << 10, "m": 1 << 20, "g": _GIB, "t": 1 << 40}
+    s = spec.strip().lower().rstrip("b")
+    if s and s[-1] in units:
+        return int(float(s[:-1]) * units[s[-1]])
+    return int(s)
+
+
+def _local_threads(master: str) -> int | None:
+    """Task threads of a local master (local, local[4], local[*, 2]);
+    None for a cluster master."""
+    import re
+
+    m = re.fullmatch(r"local(?:\[(\*|\d+)(?:\s*,\s*\d+)?\])?", master.strip())
+    if not m:
+        return None
+    return host_cores() if m.group(1) == "*" else int(m.group(1) or 1)
+
+
+def default_driver_memory(ram: int | None, workers: int) -> str:
+    """A third of what the Python workers leave of the host's RAM, at
+    least 1g: local mode runs every task thread in this one JVM, and
+    off-heap Arrow buffers, metaspace, the driver's Python process and
+    the page cache need the rest."""
+    if ram is None:
+        return "4g"
+    free = ram - workers * PY_WORKER_BYTES
+    return f"{max(1, free // 3 // _GIB)}g"
+
+
 def get_spark(
     app_name: str = "redeye_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession.
+    """Build (or reuse) a SparkSession sized for the host it runs on.
 
-    master defaults to $SPARK_GRAFT_MASTER or local[$SPARK_GRAFT_CPUS];
-    on a real cluster pass None and let spark-submit own it.
+    master defaults to $SPARK_GRAFT_MASTER or local[$SPARK_GRAFT_CPUS],
+    where SPARK_GRAFT_CPUS defaults to the host's CPU count; on a real
+    cluster pass None and let spark-submit own it. The driver heap
+    ($SPARK_GRAFT_DRIVER_MEM or extra_conf's spark.driver.memory)
+    defaults to a third of the RAM the Python workers leave, at least
+    1g; a requested heap that, with one Python worker per local task
+    thread, does not fit in the host's RAM is refused with a ValueError
+    before any JVM starts.
     """
     builder = SparkSession.builder.appName(app_name)
-    # local-mode driver == all executors: size the heap for the thread
-    # count (default 1g thrashes with 32 concurrent parquet writers).
-    builder = builder.config(
-        "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
-    ).config("spark.driver.maxResultSize", "4g")
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(host_cores())
         master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     if master:
         builder = builder.master(master)
@@ -102,8 +172,21 @@ def get_spark(
         conf.setdefault("spark.local.dir", ld)
     if shuffle_partitions is not None:
         conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    ram = host_memory_bytes()
+    workers = (_local_threads(master) if master else None) or 0
+    conf["spark.driver.memory"] = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(ram, workers)
+    conf["spark.driver.maxResultSize"] = "4g"
+    requested = bool(os.environ.get("SPARK_GRAFT_DRIVER_MEM") or "spark.driver.memory" in (extra_conf or {}))
     if extra_conf:
         conf.update(extra_conf)
+    heap = parse_memory(conf["spark.driver.memory"])
+    if requested and ram is not None and heap + workers * PY_WORKER_BYTES > ram:
+        raise ValueError(
+            f"driver heap {conf['spark.driver.memory']} plus {workers} Python workers "
+            f"(~{workers * PY_WORKER_BYTES / _GIB:.1f} GiB) does not fit in this host's "
+            f"{ram / _GIB:.1f} GiB of RAM; lower SPARK_GRAFT_DRIVER_MEM or the task "
+            f"threads (SPARK_GRAFT_CPUS / master {master!r})"
+        )
     # Parallel (throughput) GC: the pipeline's executors run 2-8 core
     # slices with 12g heaps and allocation-heavy Arrow->row conversion;
     # G1's concurrent cycles compete with the pinned task cores there.

@@ -1,0 +1,214 @@
+"""The worker-side text reader (sources.textfiles) against Spark's text
+scan: read_text_lines / text_lines_df and the text_files parse path must
+give the same rows as the scan -> numbering window -> tokenize ->
+parse_sequences path, and anything the reader does not take must fall
+back to that path with a reason."""
+
+import gzip
+import io
+import random
+import re
+
+import pandas as pd
+import pytest
+
+from redeye_spark.operators import parse_op
+from redeye_spark.operators.tokenize_op import (
+    number_text_lines,
+    read_text_lines,
+    text_lines_df,
+    tokenize_lines,
+)
+from redeye_spark.plans.pipeline import PipelineConfig, parse_input, run_pipeline
+from redeye_spark.sources import textfiles
+from redeye_spark.sources.io import ParquetIO
+
+LINE = b'1.2.3.4 - u1 [10/Oct/2000:13:55:36 -0700] "GET /a HTTP/1.0" 200 10'
+LINE2 = b'5.6.7.8 - - [11/Oct/2000:01:02:03 +0200] "POST /b?q=1 HTTP/1.1" 404 -'
+
+
+def _write(path, data: bytes):
+    path.parent.mkdir(parents=True, exist_ok=True)
+    path.write_bytes(data)
+    return path
+
+
+def _scan_rows(spark, path):
+    """Today's general path: Spark's text scan, the numbering window,
+    the tokenize hop, then parse_sequences."""
+    tokens = tokenize_lines(number_text_lines(textfiles.text_scan(spark, path)))
+    return parse_op.parse_sequences(tokens, carry_tokens=True)
+
+
+def _frame(df):
+    pdf = df.toPandas()
+    if "tokens" in pdf:
+        pdf["tokens"] = pdf["tokens"].map(tuple)
+    return pdf.sort_values("doc_id").reset_index(drop=True)
+
+
+def assert_same_rows(spark, path, num_tasks):
+    """Whole parsed rows (doc_id, source, tokens, message, every field)
+    through the text_files parse path equal the scan path's; so do the
+    tokenized and line frames of the two readers."""
+    expected = _frame(_scan_rows(spark, path))
+    raw = read_text_lines(spark, path)
+    parsed, parse_path, reason = parse_input(
+        spark, raw, PipelineConfig(num_partitions=num_tasks, carry_tokens=True)
+    )
+    assert (parse_path, reason) == ("text_files", None)
+    pd.testing.assert_frame_equal(_frame(parsed), expected)
+    old_tokens = tokenize_lines(number_text_lines(textfiles.text_scan(spark, path)))
+    pd.testing.assert_frame_equal(_frame(raw), _frame(old_tokens))
+    old_lines = number_text_lines(textfiles.text_scan(spark, path))
+    pd.testing.assert_frame_equal(
+        _frame(text_lines_df(spark, path, num_tasks)), _frame(old_lines), check_dtype=False
+    )
+    return expected
+
+
+class TestRowsIdenticalToScanPath:
+    def test_line_endings_and_blank_lines(self, spark, tmp_path):
+        _write(tmp_path / "crlf.log", LINE + b"\r\n" + LINE2 + b"\r\n\r\n" + LINE)
+        _write(tmp_path / "cr.log", LINE + b"\r" + LINE2 + b"\r\r" + LINE + b"\r")
+        _write(tmp_path / "mixed.log", LINE + b"\r\n" + LINE2 + b"\r" + LINE + b"\n")
+        # empty, spaces-only (dropped), tab-only (kept: trim strips spaces only)
+        _write(tmp_path / "blank.log", b"\n   \n\t\n" + LINE + b"\n \t \n\n")
+        _write(tmp_path / "empty.log", b"")
+        _write(tmp_path / "bom.log", b"\xef\xbb\xbf" + LINE + b"\n" + LINE2)
+        for n in (1, 4):
+            rows = assert_same_rows(spark, str(tmp_path), n)
+        ids = set(rows["doc_id"])
+        assert f"{tmp_path}/cr.log#4" in ids and f"{tmp_path}/cr.log#3" not in ids
+        assert f"{tmp_path}/blank.log#3" in ids  # the tab-only line
+        assert f"{tmp_path}/blank.log#2" not in ids  # the spaces-only line
+        assert not any(i.startswith(f"{tmp_path}/empty.log") for i in ids)
+        assert rows.loc[rows["doc_id"] == f"{tmp_path}/crlf.log#2", "message"].item() == LINE2.decode()
+
+    def test_last_line_without_newline(self, spark, tmp_path):
+        _write(tmp_path / "a.log", LINE + b"\n" + LINE2)
+        rows = assert_same_rows(spark, str(tmp_path), 2)
+        assert list(rows["doc_id"]) == [f"{tmp_path}/a.log#1", f"{tmp_path}/a.log#2"]
+
+    def test_range_boundaries_mid_line_and_on_newline(self, spark, tmp_path):
+        # 30 bytes over 3 tasks: cuts at byte 10 (the first "\n") and
+        # byte 20 (inside the second line)
+        data = b"A" * 10 + b"\n" + b"B" * 14 + b"\n" + b"C" * 4
+        assert len(data) == 30 and data[10:11] == b"\n" and data[20:21] == b"B"
+        _write(tmp_path / "cut.log", data)
+        rows = assert_same_rows(spark, str(tmp_path), 3)
+        assert list(rows["doc_id"]) == [f"{tmp_path}/cut.log#{i}" for i in (1, 2, 3)]
+
+    def test_one_file_over_many_tasks(self, spark, tmp_path):
+        rng = random.Random(5)
+        lines = [rng.choice([LINE, LINE2, b"", b"junk " * rng.randint(0, 9)]) for _ in range(400)]
+        _write(tmp_path / "hot.log", b"\n".join(lines) + b"\n")
+        _write(tmp_path / "cold.log", LINE + b"\n")
+        for n in (3, 7, 16):
+            assert_same_rows(spark, str(tmp_path), n)
+        ranges = textfiles.byte_ranges([len(b"\n".join(lines)) + 1], 7)
+        assert sum(1 for r in ranges if r) == 7  # every task holds part of the file
+
+    def test_same_basename_in_two_dirs_and_a_space_in_a_dir(self, spark, tmp_path):
+        _write(tmp_path / "hostA" / "access.log", LINE + b"\n")
+        _write(tmp_path / "host B" / "access.log", LINE2 + b"\n" + LINE + b"\n")
+        rows = assert_same_rows(spark, str(tmp_path) + "/*/", 3)
+        assert len(set(rows["doc_id"])) == 3 and set(rows["source"]) == {"access.log"}
+        # Spark lists URL-encoded paths, and doc_id has always carried them
+        assert f"{tmp_path}/host%20B/access.log#2" in set(rows["doc_id"])
+
+    def test_invalid_utf8_fails_on_both_paths(self, spark, tmp_path):
+        _write(tmp_path / "bad.log", LINE + b"\n\xff\xfe bad \xc3\n" + LINE2 + b"\n")
+        with pytest.raises(Exception):
+            _scan_rows(spark, str(tmp_path)).collect()
+        raw = read_text_lines(spark, str(tmp_path))
+        parsed, parse_path, _ = parse_input(spark, raw, PipelineConfig(num_partitions=2))
+        assert parse_path == "text_files"
+        with pytest.raises(Exception, match=re.escape(f"{tmp_path}/bad.log#2: invalid UTF-8")):
+            parsed.collect()
+
+    def test_gz_file_takes_the_fallback(self, spark, tmp_path):
+        _write(tmp_path / "plain.log", LINE + b"\n")
+        _write(tmp_path / "old.log.gz", gzip.compress(LINE2 + b"\n\n" + LINE + b"\n"))
+        raw = read_text_lines(spark, str(tmp_path))
+        files, reason = textfiles.tagged(raw)
+        assert files is None and "compressed file" in reason and "old.log.gz" in reason
+        parsed, parse_path, why = parse_input(spark, raw, PipelineConfig(num_partitions=2, carry_tokens=True))
+        assert parse_path == "general" and why == f"text input: {reason}"
+        got = _frame(parsed)
+        pd.testing.assert_frame_equal(got, _frame(_scan_rows(spark, str(tmp_path))))
+        assert set(got["doc_id"]) == {f"{tmp_path}/plain.log#1", f"{tmp_path}/old.log.gz#1", f"{tmp_path}/old.log.gz#3"}
+
+
+class TestParsePathReport:
+    def test_text_files_for_read_text_lines_and_general_when_filtered(self, spark, tmp_path):
+        logs = tmp_path / "logs"
+        _write(logs / "web.log", LINE + b"\nnot a log line\n" + LINE2 + b"\n")
+        cfg = PipelineConfig(num_partitions=2)
+        raw = read_text_lines(spark, str(logs))
+        res = run_pipeline(spark, raw, ParquetIO(str(tmp_path / "a")), cfg)
+        assert (res.parse_path, res.fallback_reason) == ("text_files", None)
+        assert (res.rows_in, res.rows_err) == (3, 1)
+        res = run_pipeline(spark, raw.filter("n_tok > 20"), ParquetIO(str(tmp_path / "b")), cfg)
+        assert res.parse_path == "general" and "num_partitions" in res.fallback_reason
+        res = run_pipeline(spark, raw.filter("n_tok > 20"), ParquetIO(str(tmp_path / "c")), PipelineConfig())
+        assert res.parse_path == "general" and res.fallback_reason == "plan root is Filter, not a file scan"
+        assert (res.rows_in, res.rows_err) == (2, 0)
+
+    def test_parquet_scan_reasons(self, spark, tmp_path):
+        from redeye_spark.schema import RAW_SEQUENCES
+
+        spark.createDataFrame([("d#1", [65], 1, "s")], RAW_SEQUENCES).write.parquet(str(tmp_path / "t"))
+        raw = spark.read.parquet(str(tmp_path / "t"))
+        files, reason = parse_op.parquet_scan(raw)
+        assert files and reason is None
+        assert parse_op.parquet_scan(raw.select("doc_id"))[1].startswith("columns are not")
+        assert parse_op.parquet_scan(raw.limit(1)) == (None, "plan root is GlobalLimit, not a file scan")
+        assert parse_input(spark, raw, PipelineConfig())[1:] == ("parquet_files", None)
+
+
+def _reference_lines(data: bytes):
+    """Hadoop LineRecordReader semantics on a whole file, then the blank
+    filter: (physical line number, line bytes)."""
+    parts = re.split(rb"\r\n|\n|\r", data) if data else []
+    if parts and re.search(rb"(\r\n|\n|\r)$", data):
+        parts = parts[:-1]
+    out = []
+    for no, line in enumerate(parts, 1):
+        if no == 1 and line.startswith(b"\xef\xbb\xbf"):
+            line = line[3:]
+        if line.strip(b" "):
+            out.append((no, line))
+    return out
+
+
+def test_piece_reader_matches_line_semantics_for_any_cut_and_block():
+    """Every byte range cut and read-block size, including 1-byte blocks
+    that split a CRLF, gives the whole-file line split."""
+    rng = random.Random(0)
+    alphabet = [b"a", b" ", b"\t", b"\n", b"\r", b"\r\n", b"xyz", b"\xef\xbb\xbf"]
+    for _ in range(400):
+        data = b"".join(rng.choice(alphabet) for _ in range(rng.randint(0, 30)))
+        if rng.random() < 0.3:
+            data = b"\xef\xbb\xbf" + data
+        for n in (1, 2, 3, 7, 40):
+            for block in (1, 2, 5, 1 << 20):
+                got = []
+                for pieces in textfiles.byte_ranges([len(data)], n):
+                    for _, a, b in pieces:
+                        for numbers, buf, offs in textfiles._read_piece(io.BytesIO(data), len(data), a, b, block):
+                            raw = buf.tobytes()
+                            got += [(int(k), raw[offs[j]:offs[j + 1]]) for j, k in enumerate(numbers)]
+                assert got == _reference_lines(data), (data, n, block)
+
+
+def test_byte_ranges_cover_every_byte_once():
+    sizes = [0, 7, 1, 0, 30, 2]
+    for n in (1, 2, 3, 8, 50):
+        ranges = textfiles.byte_ranges(sizes, n)
+        assert len(ranges) == n
+        covered = sorted((i, a, b) for r in ranges for i, a, b in r)
+        for i, size in enumerate(sizes):
+            spans = [(a, b) for j, a, b in covered if j == i]
+            assert sum(b - a for a, b in spans) == size
+            assert all(b > a for a, b in spans)
