@@ -27,7 +27,7 @@ if __package__ in (None, ""):
 
 from redeye_spark.functions.logparse import FORMAT_COMBINED, FORMAT_COMMON
 from redeye_spark.plans.pipeline import PipelineConfig, run_pipeline
-from redeye_spark.plans.checkpoint import run_checkpointed
+from redeye_spark.plans.checkpoint import manifest_result, run_checkpointed
 from redeye_spark.sources.io import resolve_io
 
 
@@ -52,7 +52,6 @@ def build_arg_parser() -> argparse.ArgumentParser:
                    help="partition column for pushdown-able chunking (default: doc_id hash)")
     p.add_argument("--resume", action="store_true", help="skip chunks already complete in the manifest")
     p.add_argument("--salt-buckets", type=int, default=16)
-    p.add_argument("--no-salted-agg", action="store_true")
     p.add_argument("--bucket", default="hour", choices=["minute", "hour", "day"])
     p.add_argument(
         "--arrow-batch-rows", type=int, default=None,
@@ -106,7 +105,6 @@ def main(argv: list[str] | None = None) -> int:
         or (spark.sparkContext.defaultParallelism if args.text_input else None),
         bucket_granularity=args.bucket,
         salt_buckets=args.salt_buckets,
-        use_salted_agg=not args.no_salted_agg,
     )
     io = resolve_io(spark, args.output)
     if args.grok:
@@ -169,28 +167,19 @@ def main(argv: list[str] | None = None) -> int:
             spark, raw, io, args.checkpoint_dir, cfg,
             n_chunks=args.chunks, chunk_by=args.chunk_by,
         )
-        chunks = list(manifest["chunks"].values())
-        stats = {
-            "rows_in": sum(c["rows_in"] for c in chunks),
-            "rows_ok": sum(c["rows_ok"] for c in chunks),
-            "rows_err": sum(c["rows_err"] for c in chunks),
-            "chunks": len(chunks),
-            # every chunk filters the input, so all take one path; a
-            # manifest from before this field existed reports none
-            "parse_path": chunks[0].get("parse_path") if chunks else None,
-            "fallback_reason": chunks[0].get("fallback_reason") if chunks else None,
-        }
+        res, extra = manifest_result(manifest), {"chunks": len(manifest["chunks"])}
     else:
-        res = run_pipeline(spark, raw, io, cfg)
-        stats = {
-            "rows_in": res.rows_in,
-            "rows_ok": res.rows_ok,
-            "rows_err": res.rows_err,
-            "sinks": res.sink_rows,
-            "wall_sec": round(res.wall_sec, 3),
-            "parse_path": res.parse_path,
-            "fallback_reason": res.fallback_reason,
-        }
+        res, extra = run_pipeline(spark, raw, io, cfg), {}
+    stats = {
+        "rows_in": res.rows_in,
+        "rows_ok": res.rows_ok,
+        "rows_err": res.rows_err,
+        "sinks": res.sink_rows,
+        "wall_sec": round(res.wall_sec, 3),
+        "parse_path": res.parse_path,
+        "fallback_reason": res.fallback_reason,
+        **extra,
+    }
 
     if args.json_sink:
         # The reference's primary output contract: one JSON object per ok

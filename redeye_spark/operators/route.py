@@ -5,12 +5,9 @@ The reference routes each line to exactly one of {stdout, stderr+drop}
 mutually-exclusive, total partition of the rows; the dead-letter route
 is the stderr analog and preserves (error_kind, message).
 
-Two write strategies:
-  * partitioned single-pass (default): tag each row with its sink name
-    and write once with partitionBy("sink") — ONE scan of the parsed
-    data, no per-sink re-scan jobs. Preferred at 100 TB.
-  * per-sink fan-out: persist once, then filter+write per sink — needed
-    when sinks are heterogeneous targets (different tables/catalogs).
+Each row is tagged with its sink name and plans.pipeline.run_pipeline
+writes them once with partitionBy("sink") — ONE scan of the parsed
+data, no per-sink re-scan jobs.
 """
 
 from __future__ import annotations
@@ -56,25 +53,3 @@ def tag_routes(enriched: DataFrame, routes: list[Route] | None = None) -> DataFr
 def route_counts(tagged: DataFrame) -> DataFrame:
     """Rows per sink; with total routes, sum == input rows (FIXTURES §3.3)."""
     return tagged.groupBy("sink").agg(F.count(F.lit(1)).alias("n"))
-
-
-def write_partitioned(tagged: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Single-pass fan-out: one job, one scan, sink=<name>/ dirs."""
-    tagged.write.mode(mode).partitionBy("sink").parquet(path)
-
-
-def fan_out_write(enriched: DataFrame, writer, routes: list[Route] | None = None) -> dict[str, int]:
-    """Heterogeneous-sink fan-out: persist the parsed stream once, then one
-    filtered write per sink. writer(df, sink_name) performs the write.
-    Returns per-sink row counts."""
-    from pyspark import StorageLevel
-
-    routes = routes or DEFAULT_ROUTES
-    tagged = tag_routes(enriched, routes).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        counts = {r["sink"]: r["n"] for r in route_counts(tagged).collect()}
-        for r in routes:
-            writer(tagged.filter(F.col("sink") == r.name).drop("sink"), r.name)
-        return {r.name: counts.get(r.name, 0) for r in routes}
-    finally:
-        tagged.unpersist()

@@ -2,11 +2,16 @@
 
 Spark batch jobs have no built-in partial-resume; this implements it at
 the plan level: the input keyspace is split into deterministic chunks,
-each chunk runs as an independent pipeline pass appending to the same
-sinks, and a manifest records per-chunk lineage (input fingerprint, row
-counts, wall time, config). Resume skips chunks whose manifest entry is
-complete, so a killed run continues where it stopped and the final
-sinks are identical to an uninterrupted run (FIXTURES §3.5).
+each chunk is committed by the same function as a plain run
+(plans.pipeline.run_pipeline with the chunk's id), and a manifest
+records per-chunk lineage (input fingerprint, row counts, per-sink and
+per-partition metrics from the commit's own write, wall time) and, once
+per run, the config that changes results. Resume skips chunks whose
+manifest entry is complete and refuses a changed config or input, so a
+killed run continues where it stopped and the final sinks are identical
+to an uninterrupted run (FIXTURES §3.5). This module only plans chunks,
+fingerprints them, checks a resume and keeps the manifest; it never
+writes, reads back or counts a sink itself.
 
 Two chunking modes:
   * hash mode (default): chunk_id = pmod(xxhash64(doc_id), n_chunks) —
@@ -28,12 +33,12 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections import Counter
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from .pipeline import PipelineConfig, parse_input, tag_parsed
-from ..operators import aggregate as agg_op
-from ..operators import route as route_op
+# final_counts reads the chunked aggregate table back; kept importable here
+from .pipeline import PipelineConfig, PipelineResult, final_counts, run_pipeline  # noqa: F401
 from ..sources.io import TableIO
 
 MANIFEST = "manifest.json"
@@ -59,7 +64,7 @@ def _save_manifest(checkpoint_dir: str, manifest: dict) -> None:
     os.makedirs(checkpoint_dir, exist_ok=True)
     tmp = _manifest_path(checkpoint_dir) + ".tmp"
     with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=2, sort_keys=True)
+        json.dump(manifest, f, indent=2)
     os.replace(tmp, _manifest_path(checkpoint_dir))  # atomic commit
 
 
@@ -151,29 +156,34 @@ def run_checkpointed(
 ) -> dict:
     """Run the pipeline chunk-by-chunk with resume.
 
-    Returns the manifest. Sinks receive one append per chunk; aggregates
-    are written per-chunk and re-aggregated on read (sum of partial
-    counts — associative, so chunking never changes results).
+    Returns the manifest. Each chunk is one run_pipeline commit of its
+    filtered input; aggregates are written per-chunk and re-aggregated
+    on read (sum of partial counts — associative, so chunking never
+    changes results).
     """
     cfg = cfg or PipelineConfig()
+    if n_chunks < 1:
+        raise ValueError(f"n_chunks must be >= 1, got {n_chunks}")
     manifest = load_manifest(checkpoint_dir)
+    # The run's identity; a resume must match it. Another chunking
+    # double- and under-writes rows, and another output-changing config
+    # mixes two outputs in the sinks (hour and day buckets in one
+    # agg_counts); the salt changes no output. A key an older manifest
+    # lacks reads as None: no chunk_by is hash mode, no config is refused.
+    identity = {
+        "n_chunks": n_chunks,
+        "chunk_by": chunk_by,
+        "config": {
+            "fmt": cfg.fmt,
+            "bucket_granularity": cfg.bucket_granularity,
+            "routes": cfg.route_names(),
+        },
+    }
     if not manifest["chunks"]:
-        manifest["n_chunks"] = n_chunks
-        manifest["chunk_by"] = chunk_by
-    else:
-        # manifests from before chunk_by existed were hash-chunked: treat
-        # a missing key as None so the mismatch check can't be satisfied
-        # by accident (resuming a hash-chunked run in chunk_by mode would
-        # double- and under-write rows silently)
-        manifest.setdefault("chunk_by", None)
-    if manifest["n_chunks"] != n_chunks:
-        raise ValueError(
-            f"resume with n_chunks={n_chunks} but manifest has {manifest['n_chunks']}"
-        )
-    if manifest["chunk_by"] != chunk_by:
-        raise ValueError(
-            f"resume with chunk_by={chunk_by!r} but manifest has {manifest['chunk_by']!r}"
-        )
+        manifest.update(identity)
+    for key, value in identity.items():
+        if manifest.get(key) != value:
+            raise ValueError(f"resume with {key}={value!r} but manifest has {manifest.get(key)!r}")
 
     if chunk_by:
         # The value->chunk assignment is part of the run's identity: it is
@@ -210,86 +220,47 @@ def run_checkpointed(
                     "stale — start a fresh run"
                 )
 
-    done = 0
-    for chunk in pending:
+    for done, chunk in enumerate(pending):
         if fail_after is not None and done >= fail_after:
             raise RuntimeError(f"injected failure after {done} chunks")
-
-        t0 = time.monotonic()
         if chunk_by:
             pred = _chunk_predicate(chunk_by, values[chunk])  # pushdown-able In
         else:
             pred = chunk_column(n_chunks) == chunk
-        part = raw.filter(pred)
-
-        # part_id records the physical parse partition per row, so the
-        # manifest can carry per-partition metrics (north_rule lineage).
-        parsed, parse_path, fallback_reason = parse_input(spark, part, cfg)
-        tagged = (
-            tag_parsed(parsed, cfg, source_dim)
-            .withColumn("chunk_id", F.lit(chunk))
-            .withColumn("part_id", F.spark_partition_id())
-        )
-        # Idempotent commit unit: each chunk overwrites only its own
-        # chunk_id=... partitions, so a rerun of a half-written chunk
-        # (killed after the sink write but before the manifest write)
-        # replaces rather than duplicates. No persist — the committed
-        # chunk partitions are the reuse point (partition-pruned reads).
-        io.write(tagged, events_table, mode="overwrite_partitions", partition_by=["chunk_id", "sink"])
-        chunk_events = io.read(spark, events_table).filter(F.col("chunk_id") == chunk)
-        counts = (
-            agg_op.salted_counts(chunk_events, cfg.bucket_granularity, cfg.salt_buckets)
-            if cfg.use_salted_agg
-            else agg_op.sink_counts(chunk_events, cfg.bucket_granularity)
-        ).withColumn("chunk_id", F.lit(chunk))
-        io.write(counts, agg_table, mode="overwrite_partitions", partition_by=["chunk_id"])
-        # ONE metric scan per chunk: (part_id, sink) cells are bounded
-        # (parse partitions x routes) and roll up client-side into both
-        # the per-sink totals and the per-partition lineage metrics —
-        # previously two separate scans of the committed chunk
-        metric_rows = (
-            chunk_events.groupBy("part_id", "sink")
-            .agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.count(F.when(F.col("error_kind").isNotNull(), 1)).alias("err"),
-            )
-            .collect()
-        )
-        per_sink: dict = {}
-        parts: dict = {}
-        for r in metric_rows:
-            per_sink[r["sink"]] = per_sink.get(r["sink"], 0) + r["rows"]
-            p = parts.setdefault(r["part_id"], {"rows": 0, "err": 0})
-            p["rows"] += r["rows"]
-            p["err"] += r["err"]
-        per_partition = [
-            {"part_id": pid, "rows": v["rows"], "err": v["err"]}
-            for pid, v in sorted(parts.items())
-        ]
-
-        rows_err = per_sink.get(route_op.DEAD_LETTER, 0)
+        res = run_pipeline(spark, raw.filter(pred), io, cfg, source_dim,
+                           events_table, agg_table, chunk_id=chunk)
         manifest["chunks"][str(chunk)] = {
             "status": "complete",
             "input": fps[chunk],
-            "rows_in": sum(per_sink.values()),
-            "rows_ok": sum(per_sink.values()) - rows_err,
-            "rows_err": rows_err,
-            "sinks": per_sink,
-            "partitions": per_partition,
+            "rows_in": res.rows_in,
+            "rows_ok": res.rows_ok,
+            "rows_err": res.rows_err,
+            "sinks": res.sink_rows,
+            "partitions": res.partitions,
             "chunk_values": values[chunk] if chunk_by else None,
-            "parse_path": parse_path,
-            "fallback_reason": fallback_reason,
-            "wall_sec": round(time.monotonic() - t0, 3),
-            "config": {"fmt": cfg.fmt, "salt_buckets": cfg.salt_buckets},
+            "parse_path": res.parse_path,
+            "fallback_reason": res.fallback_reason,
+            "wall_sec": round(res.wall_sec, 3),
             "completed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
         _save_manifest(checkpoint_dir, manifest)
-        done += 1
     return manifest
 
 
-def final_counts(spark: SparkSession, io: TableIO, agg_table: str = "agg_counts") -> DataFrame:
-    """Re-aggregate per-chunk partial counts into the final table."""
-    df = io.read(spark, agg_table)
-    keys = ["sink", "bucket"] + agg_op.AGG_KEYS
-    return df.groupBy(*keys).agg(F.sum("n").alias("n"))
+def manifest_result(manifest: dict) -> PipelineResult:
+    """A checkpointed run in run_pipeline's result shape: counts summed
+    over the chunks, ``wall_sec`` the chunks' summed commit time. Every
+    chunk filters the input, so all take one parse path."""
+    chunks = list(manifest["chunks"].values())
+    sinks = Counter()
+    for c in chunks:
+        sinks.update(c["sinks"])
+    return PipelineResult(
+        rows_in=sum(c["rows_in"] for c in chunks),
+        rows_ok=sum(c["rows_ok"] for c in chunks),
+        rows_err=sum(c["rows_err"] for c in chunks),
+        sink_rows=dict(sinks),
+        wall_sec=sum(c["wall_sec"] for c in chunks),
+        parse_path=chunks[0]["parse_path"],
+        fallback_reason=chunks[0]["fallback_reason"],
+    )

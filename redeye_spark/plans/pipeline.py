@@ -14,16 +14,22 @@ single mapInArrow parse inside whole-stage codegen:
   mapInArrow(source+parse+classify)     — the only Python hop
   enrich expressions                    — codegen, no shuffle
   tag sink (case expression)            — codegen
-  write partitionBy(sink)               — single pass over the data
-  groupBy(sink,bucket,keys).count()     — salted two-phase option
+  write partitionBy(sink)               — single pass over the data; the
+                                          per-sink and per-partition
+                                          counts ride it (df.observe)
+  groupBy(sink,bucket,keys).count()     — salted, over the committed sink
 
-run_pipeline reports which line source the parse took (``parse_path``)
-and, when it was the general one, why (``fallback_reason``).
+run_pipeline is the one commit function: a plain run is the case with
+no chunk id, and each chunk of plans.checkpoint.run_checkpointed is the
+same commit with its chunk id. It reports which line source the parse
+took (``parse_path``) and, when it was the general one, why
+(``fallback_reason``).
 """
 
 from __future__ import annotations
 
 import time
+from collections import Counter
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -46,8 +52,10 @@ class PipelineConfig:
     carry_tokens: bool = False  # True only when the invariant is checked inline
     bucket_granularity: str = "hour"
     salt_buckets: int = 16
-    use_salted_agg: bool = True
     routes: list = field(default_factory=lambda: list(route_op.DEFAULT_ROUTES))
+
+    def route_names(self) -> list[str]:
+        return [r.name for r in (self.routes or route_op.DEFAULT_ROUTES)]
 
 
 def parse_input(
@@ -116,6 +124,9 @@ def build_tagged(
     return tag_parsed(parse_input(spark, raw, cfg)[0], cfg, source_dim)
 
 
+_MAX_TASKS = 1 << 20  # parse tasks run_pipeline counts one by one
+
+
 @dataclass
 class PipelineResult:
     rows_in: int
@@ -125,6 +136,9 @@ class PipelineResult:
     wall_sec: float
     parse_path: str = "general"  # text_files | parquet_files | general
     fallback_reason: str | None = None  # why the parse took the general path
+    # [{part_id, rows, err}] per parse task that had rows; None when the
+    # sink is not Parquet/ORC (no Observation metrics)
+    partitions: list[dict] | None = None
 
 
 def run_pipeline(
@@ -136,44 +150,70 @@ def run_pipeline(
     events_table: str = "events",
     agg_table: str = "agg_counts",
     write_mode: str = "overwrite",
+    chunk_id: int | None = None,
 ) -> PipelineResult:
-    """Execute the full plan: ONE pass parses and writes all sinks (the
-    per-sink counters ride that same job as Observation metrics), then
-    a cheap column-pruned pass over the committed events table computes
-    the aggregate table."""
+    """Commit ``raw``: ONE pass parses and writes all sinks (the per-sink
+    and per-partition counters ride that same job as Observation
+    metrics), then a cheap column-pruned pass over the committed events
+    table computes the aggregate table.
+
+    With a ``chunk_id`` this is one checkpoint chunk's commit: ``raw`` is
+    the chunk's filtered input, rows carry a ``chunk_id`` column, and
+    both tables overwrite only that chunk's partitions (events by
+    chunk_id and sink, counts by chunk_id), so rerunning a half-committed
+    chunk replaces rather than duplicates. Without one, events are
+    partitioned by sink and both tables use ``write_mode``.
+
+    Sinks other than Parquet/ORC directories (IcebergIO) take per-sink
+    counts from a groupBy over the committed aggregate table, and report
+    ``partitions`` as None."""
     cfg = cfg or PipelineConfig()
     t0 = time.monotonic()
 
+    if chunk_id is None:
+        chunk_cols, in_chunk, events_by, agg_by = [], F.lit(True), ["sink"], None
+    else:
+        chunk_cols, in_chunk = [F.lit(chunk_id).alias("chunk_id")], F.col("chunk_id") == chunk_id
+        events_by, agg_by, write_mode = ["chunk_id", "sink"], ["chunk_id"], "overwrite_partitions"
     # No persist: the committed events table IS the reuse point. The parse
     # UDF runs exactly once (the sink write); the aggregate pass re-reads
     # the columnar sink with column pruning (5 narrow columns), which at
     # any scale beats caching the full wide stream on-heap.
     parsed, parse_path, fallback_reason = parse_input(spark, raw, cfg)
-    tagged = tag_parsed(parsed, cfg, source_dim)
-    # Per-sink counters ride the sink-write job itself via df.observe —
-    # zero extra jobs (previously a third job re-read the agg table to
-    # sum them). Observation aggregates can't groupBy, but the route
-    # list is a static config, so one conditional sum per route (+ one
-    # for NULL sinks: a non-total custom route list leaves unmatched
-    # rows sink=NULL, and they ARE written) is exact and bounded.
+    tagged = tag_parsed(parsed, cfg, source_dim).select("*", *chunk_cols)
+    # Per-sink and per-partition counters ride the sink-write job itself
+    # via df.observe — zero extra jobs. Observation aggregates can't
+    # groupBy, but the route list is a static config, so one conditional
+    # sum per route (+ one for NULL sinks: a non-total custom route list
+    # leaves unmatched rows sink=NULL, and they ARE written) is exact and
+    # bounded. histogram_numeric over the partition id keeps one bin per
+    # id up to _MAX_TASKS ids, so it counts each parse task exactly at
+    # O(1) per row (a conditional sum per task costs O(tasks) per row).
+    # No exchange separates the parse from the write, so the partition
+    # id here is the parse task's.
     # Guarded to the Parquet/ORC v1 write path: obs.get has no timeout,
     # and CollectMetrics delivery through a DataFrameWriterV2 command
     # (IcebergIO) is unverified in this sandbox — there the counters
     # fall back to a groupBy over the committed table.
     from pyspark.sql import Observation
 
-    route_names = [r.name for r in (cfg.routes or route_op.DEFAULT_ROUTES)]
+    route_names = cfg.route_names()
     use_observe = isinstance(io, ParquetIO)
     if use_observe:
         obs = Observation("route_metrics")
-        tagged = tagged.observe(
+        # the id is projected first: histogram_numeric does not
+        # initialize a nondeterministic argument like spark_partition_id
+        pid = F.col("_part_id")
+        tagged = tagged.withColumn("_part_id", F.spark_partition_id()).observe(
             obs,
             *[
                 F.sum((F.col("sink") == n).cast("long")).alias(n)
                 for n in route_names
             ],
             F.sum(F.col("sink").isNull().cast("long")).alias("_null_sink"),
-        )
+            F.histogram_numeric(pid, F.lit(_MAX_TASKS)).alias("_rows"),
+            F.histogram_numeric(F.when(F.col("error_kind").isNotNull(), pid), F.lit(_MAX_TASKS)).alias("_err"),
+        ).drop("_part_id")
     # Writer tuning for the events sink (measured at 2 cores / 1.2M rows:
     # ~24 s -> ~21 s for the write job): columns that are unique-ish per
     # row BY CONSTRUCTION (ids, raw message, per-event timestamps/urls)
@@ -200,7 +240,7 @@ def run_pipeline(
         # ~2 s of a 15 s 2-core write job, stable across runs)
         "parquet.page.write-checksum.enabled": "false",
     }
-    io.write(tagged, events_table, mode=write_mode, partition_by=["sink"],
+    io.write(tagged, events_table, mode=write_mode, partition_by=events_by,
              options=events_writer_options)
 
     # The aggregate pass reads 4 narrow columns of the committed events
@@ -224,14 +264,14 @@ def run_pipeline(
     spark.conf.set(_SPLIT_KEY, str(128 * 1024 * 1024))
     spark.conf.set(_AQE_KEY, "false")
     try:
-        events_back = io.read(spark, events_table, schema=tagged.schema)
-        counts = agg_op.salted_counts(events_back, cfg.bucket_granularity, cfg.salt_buckets) \
-            if cfg.use_salted_agg else agg_op.sink_counts(events_back, cfg.bucket_granularity)
-        io.write(counts, agg_table, mode=write_mode)
+        events_back = io.read(spark, events_table, schema=tagged.schema).filter(in_chunk)
+        counts = agg_op.salted_counts(events_back, cfg.bucket_granularity, cfg.salt_buckets)
+        io.write(counts.select("*", *chunk_cols), agg_table, mode=write_mode, partition_by=agg_by)
     finally:
         spark.conf.set(_SPLIT_KEY, prev_split)
         spark.conf.set(_AQE_KEY, prev_aqe)
 
+    partitions = None
     if use_observe:
         metrics = obs.get  # available: the sink write was the action
         # contract preserved from the agg-derived counters: only sinks
@@ -242,10 +282,14 @@ def run_pipeline(
         }
         if int(metrics["_null_sink"] or 0) > 0:
             per_sink[None] = int(metrics["_null_sink"])
+        rows, err = _per_task(metrics["_rows"]), _per_task(metrics["_err"])
+        partitions = [
+            {"part_id": p, "rows": n, "err": err[p]} for p, n in sorted(rows.items())
+        ]
     else:
         per_sink = {
             r["sink"]: r["n"]
-            for r in io.read(spark, agg_table)
+            for r in io.read(spark, agg_table).filter(in_chunk)
             .groupBy("sink").agg(F.sum("n").alias("n")).collect()
         }
     rows_err = per_sink.get(route_op.DEAD_LETTER, 0)
@@ -258,4 +302,21 @@ def run_pipeline(
         wall_sec=time.monotonic() - t0,
         parse_path=parse_path,
         fallback_reason=fallback_reason,
+        partitions=partitions,
     )
+
+
+def _per_task(histogram) -> Counter:
+    """histogram_numeric bins -> {partition id: rows}. Merged partial
+    histograms may hold several bins for one id; their counts add."""
+    out = Counter()
+    for b in histogram or ():
+        out[int(b.x)] += int(b.y)
+    return out
+
+
+def final_counts(spark: SparkSession, io: TableIO, agg_table: str = "agg_counts") -> DataFrame:
+    """The aggregate table summed over its per-chunk partial counts."""
+    df = io.read(spark, agg_table)
+    keys = ["sink", "bucket"] + agg_op.AGG_KEYS
+    return df.groupBy(*keys).agg(F.sum("n").alias("n"))

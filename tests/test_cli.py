@@ -66,6 +66,17 @@ def test_json_sink_writes_reference_shaped_lines(spark, raw_dir, capsys):
             assert set(obj["request_headers"]) <= {"referer", "user-agent"}
 
 
+def test_checkpointed_stats_carry_plain_run_keys(raw_dir, capsys):
+    run_cli(raw_dir)
+    plain = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    run_cli(raw_dir, "--checkpoint-dir", raw_dir + "/ck", "--chunks", "2")
+    chunked = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert {"sinks", "wall_sec", "parse_path", "fallback_reason"} <= set(plain)
+    assert set(chunked) == set(plain) | {"chunks"}
+    assert chunked["chunks"] == 2
+    assert chunked["sinks"] == plain["sinks"]
+
+
 def test_chunk_by_requires_checkpoint_dir(capsys):
     with pytest.raises(SystemExit):
         job_mod.main(["--combined-format", "--input", "i", "--output", "o",
