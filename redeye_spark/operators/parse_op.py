@@ -11,6 +11,11 @@ vectorized distributed operator. Sources:
   string_column   (doc_id, source, line) rows from any plan
   text files      raw .log files read, split and numbered by the worker
                   (sources.textfiles.line_source)
+
+The worker function first calls functions.worker.steady_import_caches:
+PySpark invalidates the import caches before every task, and on CPython
+3.10-3.12 that re-reads pyspark.zip and the spark-core jar, which costs a
+reused worker more CPU per task than the parse itself.
 """
 
 from __future__ import annotations
@@ -22,6 +27,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.logparse import FORMAT_COMMON
 from ..functions.tokens import tokens_equal
+from ..functions.worker import steady_import_caches
 from ..schema import parsed_schema
 
 # (frame the mapInArrow runs over, worker-side function from its input
@@ -125,6 +131,7 @@ def parse(
     names = [f.name for f in schema.fields]
 
     def fn(batches):
+        steady_import_caches()
         import pyarrow as _pa
 
         from ..functions.logparse import parse_lines_arrow

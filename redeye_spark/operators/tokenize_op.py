@@ -18,6 +18,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, types as T
 
 from ..functions.tokens import tokens_list_array, tokens_list_from_string_array
+from ..functions.worker import steady_import_caches
 from ..schema import RAW_SEQUENCES
 from ..sources import textfiles
 
@@ -34,6 +35,7 @@ def tokenize_lines(df: DataFrame, line_col: str = "line") -> DataFrame:
     """
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        steady_import_caches()
         for b in batches:
             if len(b) == 0:
                 continue
@@ -77,6 +79,7 @@ def _read_text(spark, path, num_tasks, schema, emit, fallback) -> DataFrame:
         )
 
         def fn(batches):
+            steady_import_caches()
             for doc_id, source, lines, _ in read(batches):
                 yield emit(doc_id, source, lines)
 
@@ -163,6 +166,7 @@ def detokenize_lines(df: DataFrame, keep: tuple[str, ...] = ("doc_id", "source")
     )
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        steady_import_caches()
         for b in batches:
             if len(b) == 0:
                 continue

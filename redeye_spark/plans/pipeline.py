@@ -11,7 +11,10 @@ single mapInArrow parse inside whole-stage codegen:
                                           each parse task (.log input)
     parquet files                         read by each parse task
     any other plan's token column         round-robin repartition(n)
-  mapInArrow(source+parse+classify)     — the only Python hop
+  mapInArrow(source+parse+classify)     — the only Python hop; reused
+                                          workers skip re-reading
+                                          unchanged zip archives
+                                          (functions.worker)
   enrich expressions                    — codegen, no shuffle
   tag sink (case expression)            — codegen
   write partitionBy(sink)               — single pass over the data; the
