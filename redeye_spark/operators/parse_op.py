@@ -22,11 +22,9 @@ from __future__ import annotations
 
 from typing import Callable, Iterator
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.logparse import FORMAT_COMMON
-from ..functions.tokens import tokens_equal
 from ..functions.worker import steady_import_caches
 from ..schema import parsed_schema
 
@@ -118,9 +116,10 @@ def parse(
     the rows are identical whichever shape the input had).
 
     validate=True appends the token_ok invariant column
-    (retokenize(message) == tokens, FIXTURES §3.1) in the same hop —
-    the standalone ``validate_tokens`` pass ships the full parsed frame
-    through Python a second time just to compare two byte buffers.
+    (retokenize(message) == tokens, FIXTURES §3.1) in the same hop.
+    redeye guarantees message == trimmed input line (parser.rs:165,306),
+    so for pre-trimmed lines it holds for every row, dead-letter rows
+    included.
     """
     from pyspark.sql import types as T
 
@@ -243,26 +242,6 @@ def parquet_scan(df: DataFrame) -> tuple[list[str] | None, str | None]:
 def parquet_scan_files(df: DataFrame) -> list[str] | None:
     """``parquet_scan`` without the reason."""
     return parquet_scan(df)[0]
-def validate_tokens(parsed: DataFrame) -> DataFrame:
-    """Append token_ok: retokenize(message) == tokens (FIXTURES §3.1).
-
-    redeye guarantees message == trimmed input line (parser.rs:165,306),
-    so for pre-trimmed generator lines this must hold for every row,
-    including dead-letter rows (their message is the trimmed raw line).
-    """
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(parsed.schema.fields + [T.StructField("token_ok", T.BooleanType())])
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            if len(b) == 0:
-                continue
-            b = b.reset_index(drop=True)
-            b["token_ok"] = tokens_equal(b["message"], b["tokens"])
-            yield b
-
-    return parsed.mapInPandas(fn, schema=out_schema)
 
 
 def logstash_struct() -> Column:

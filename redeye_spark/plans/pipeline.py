@@ -10,6 +10,8 @@ single mapInArrow parse inside whole-stage codegen:
     text files                            read, split and numbered by
                                           each parse task (.log input)
     parquet files                         read by each parse task
+    any other plan's line strings         (doc_id, source, line) rows,
+                                          e.g. a streaming tail batch
     any other plan's token column         round-robin repartition(n)
   mapInArrow(source+parse+classify)     — the only Python hop; reused
                                           workers skip re-reading
@@ -64,7 +66,8 @@ class PipelineConfig:
 def parse_input(
     spark: SparkSession, raw: DataFrame, cfg: PipelineConfig
 ) -> tuple[DataFrame, str, str | None]:
-    """raw sequences -> (parsed rows, parse path, why the general path).
+    """raw sequences or line strings -> (parsed rows, parse path, why
+    the general path).
 
     The parse path is the line source parse_op.parse runs over:
 
@@ -79,9 +82,10 @@ def parse_input(
                      Spark's per-element JVM-row->Arrow conversion of the
                      token column (measured ~2x the parse kernel);
       general        anything else (streaming, filtered, in-memory,
-                     non-local, compressed): the token column of
-                     ``raw``'s own plan, round-robin repartitioned to
-                     cfg.num_partitions when set.
+                     non-local, compressed): the ``line`` column of a
+                     (doc_id, source, line) ``raw``, else its token
+                     column, from ``raw``'s own plan, round-robin
+                     repartitioned to cfg.num_partitions when set.
 
     Output rows are identical whichever path is taken."""
     source, path, reason = _line_source(spark, raw, cfg)
@@ -93,15 +97,19 @@ def _line_source(spark: SparkSession, raw: DataFrame, cfg: PipelineConfig):
     if text is not None and text[0] is not None:
         n = cfg.num_partitions or spark.sparkContext.defaultParallelism
         return textfiles.line_source(spark, text[0], n), "text_files", None
+    lines = "line" in raw.columns
     if text is not None:
         reason = f"text input: {text[1]}"
+    elif lines:
+        reason = "input is (doc_id, source, line) strings, not token arrays"
     elif cfg.num_partitions is not None:
         reason = f"num_partitions={cfg.num_partitions} asks for a round-robin repartition"
     else:
         files, reason = parse_op.parquet_scan(raw)
         if files:
             return parse_op.parquet_files(spark, files), "parquet_files", None
-    return parse_op.token_column(raw, cfg.num_partitions), "general", reason
+    read = parse_op.string_column if lines else parse_op.token_column
+    return read(raw, cfg.num_partitions), "general", reason
 
 
 def tag_parsed(parsed: DataFrame, cfg: PipelineConfig, source_dim: DataFrame | None = None) -> DataFrame:

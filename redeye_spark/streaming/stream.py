@@ -4,22 +4,26 @@ The reference's streaming story is the Unix pipe (src/bin/redeye.rs:82 —
 one line in, one JSON line out; README "Tailing a File",
 README.md:115-133). The Spark-native equivalent: readStream over the
 tokenized input table (file source here; Iceberg/Kafka on a cluster) ->
-the SAME parse/enrich/tag plan -> foreachBatch fan-out writes, plus an
-optional watermarked windowed count stream for the per-sink aggregates.
+foreachBatch, each micro-batch committed by the batch commit
+(plans.pipeline.run_pipeline), plus watermarked windowed streams for
+counts, joins, sessions and dedup over the same build_tagged plan.
 
-Everything batch-mode is reused verbatim: build_tagged() is plan
-construction, agnostic to whether the source is bounded. foreachBatch
-gives exactly-once-per-sink-table semantics with the file-sink commit
-log, and the watermark bounds aggregation state for late events.
+A micro-batch is a checkpoint chunk whose id is the batch id: its rows
+land in the ``chunk_id=<batch id>`` partitions of the events and
+aggregate tables, and the commit overwrites exactly those partitions.
+foreachBatch alone is at-least-once (a restart replays the batch that
+had not been marked committed, with the same id and the same files), so
+this overwrite is what makes the sinks exactly-once: a replayed batch
+replaces its own rows instead of appending a second copy.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..plans.pipeline import PipelineConfig, build_tagged
+from ..plans.pipeline import PipelineConfig, build_tagged, run_pipeline
 from ..schema import RAW_SEQUENCES
-from ..sources.io import TableIO
+from ..sources.io import ParquetIO, TableIO
 
 
 def read_stream(
@@ -36,6 +40,13 @@ def read_stream(
     return reader.parquet(path)
 
 
+def _start(writer, checkpoint_dir: str, trigger_available_now: bool):
+    writer = writer.option("checkpointLocation", checkpoint_dir).outputMode("append")
+    if trigger_available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def start_pipeline_stream(
     spark: SparkSession,
     source_path: str,
@@ -45,33 +56,19 @@ def start_pipeline_stream(
     events_table: str = "events_stream",
     trigger_available_now: bool = True,
 ):
-    """Incremental parse->enrich->route, one micro-batch at a time.
-
-    foreachBatch reuses the batch fan-out write so the sink layout is
-    identical to the batch pipeline's; the streaming checkpoint makes
-    restarts exactly-once at the micro-batch level (the streaming analog
-    of plans/checkpoint.py's chunk manifest).
-    """
+    """Incremental parse->enrich->route->aggregate, one micro-batch at a
+    time: each batch is one run_pipeline commit with chunk_id = batch
+    id into ``events_table`` and ``agg_counts_stream``, so the sink
+    layout, counters and writer tuning are the checkpointed batch
+    run's, and a replayed batch overwrites its own partitions."""
     cfg = cfg or PipelineConfig()
-    raw = read_stream(spark, source_path)
-    tagged = build_tagged(spark, raw, cfg)
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        io.write(
-            batch_df.withColumn("batch_id", F.lit(batch_id)),
-            events_table,
-            mode="append",
-            partition_by=["sink"],
-        )
+    def commit(batch_df: DataFrame, batch_id: int) -> None:
+        run_pipeline(batch_df.sparkSession, batch_df, io, cfg, events_table=events_table,
+                     agg_table="agg_counts_stream", chunk_id=batch_id)
 
-    writer = (
-        tagged.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    stream = read_stream(spark, source_path)
+    return _start(stream.writeStream.foreachBatch(commit), checkpoint_dir, trigger_available_now)
 
 
 def start_text_tail_stream(
@@ -88,21 +85,24 @@ def start_text_tail_stream(
     A Spark file stream treats files as immutable, so "tail" becomes
     watching a spool DIRECTORY for appended log segments — exactly how
     log shippers (logrotate, fluentd, filebeat) hand files to a
-    cluster; each drop of lines is one micro-batch. The plan per batch
-    is the batch pipeline VERBATIM: number_text_lines (same provenance
-    doc_id = file#line_no) -> tokenize_lines -> build_tagged (the one
-    Arrow parse exchange + broadcast enrich + route tag) ->
-    partitioned parquet sinks plus a JSON-lines text mirror of the ok
-    rows (the reference's stdout, src/bin/redeye.rs:86-87). The
-    streaming checkpoint makes a restart resume after the last
+    cluster; each drop of lines is one micro-batch. Each batch is
+    numbered (number_text_lines: doc_id = file#line_no) and committed
+    by run_pipeline with chunk_id = batch id into ``out_dir``'s
+    ``events`` and ``agg_counts`` tables; the line strings go straight
+    into the one parse hop (no tokenize step). The JSON-lines mirror of
+    the committed ok rows (the reference's stdout,
+    src/bin/redeye.rs:86-87) goes to ``events_json/chunk_id=<batch
+    id>``, built from the committed events, so each line is parsed once.
+    The streaming checkpoint makes a restart resume after the last
     committed segment — the pipe analog of not re-reading consumed
-    stdin."""
+    stdin — and a replayed segment overwrites its own partitions."""
     import os
 
     from ..operators.parse_op import to_logstash_json
-    from ..operators.tokenize_op import number_text_lines, tokenize_lines
+    from ..operators.tokenize_op import number_text_lines
 
     cfg = cfg or PipelineConfig()
+    io = ParquetIO(out_dir)
     raw_lines = (
         spark.readStream.format("text")
         .load(watch_dir)
@@ -114,30 +114,21 @@ def start_text_tail_stream(
         )
     )
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        tokenized = tokenize_lines(number_text_lines(batch_df))
-        tagged = build_tagged(spark, tokenized, cfg)
+    def commit(batch_df: DataFrame, batch_id: int) -> None:
+        session = batch_df.sparkSession
+        if not run_pipeline(session, number_text_lines(batch_df), io, cfg, chunk_id=batch_id).rows_ok:
+            return  # no JSON lines; an events table with no files has no schema to read
+        events = io.read(session, "events").filter(F.col("chunk_id") == batch_id)
         (
-            tagged.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .partitionBy("sink")
-            .parquet(os.path.join(out_dir, "events"))
-        )
-        (
-            to_logstash_json(tagged)
-            .select("json")
-            .write.mode("append")
+            to_logstash_json(events)
+            .select("json", F.lit(batch_id).alias("chunk_id"))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("chunk_id")
             .text(os.path.join(out_dir, "events_json"))
         )
 
-    writer = (
-        raw_lines.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(raw_lines.writeStream.foreachBatch(commit), checkpoint_dir, trigger_available_now)
 
 
 def start_windowed_counts(
@@ -177,15 +168,9 @@ def start_windowed_counts(
             F.col("w.start").alias("bucket"), "sink", "status_class", "method", "source", "n"
         )
     )
-    writer = (
-        counts.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return _start(
+        counts.writeStream.format("parquet").option("path", out_path), checkpoint_dir, trigger_available_now
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_error_correlation_stream(
@@ -248,15 +233,9 @@ def start_error_correlation_stream(
         ),
         "inner",
     ).select("err_doc_id", "err_host", "err_ts", "err_status", "ok_ts", "ok_uri")
-    writer = (
-        joined.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+    return _start(
+        joined.writeStream.format("parquet").option("path", out_path), checkpoint, trigger_available_now
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_session_stream(
@@ -293,15 +272,9 @@ def start_session_stream(
         tagged.withWatermark("timestamp", watermark),
         key=key_col, ts="timestamp", gap=gap,
     )
-    writer = (
-        sessions.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+    return _start(
+        sessions.writeStream.format("parquet").option("path", out_path), checkpoint, trigger_available_now
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_dedup_stream(
@@ -329,15 +302,9 @@ def start_dedup_stream(
     deduped = ok.withWatermark("timestamp", watermark).dropDuplicatesWithinWatermark(
         list(key_cols)
     )
-    writer = (
-        deduped.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+    return _start(
+        deduped.writeStream.format("parquet").option("path", out_path), checkpoint, trigger_available_now
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_upsert_stream(
@@ -397,14 +364,7 @@ def start_upsert_stream(
             partition_by=partition_by, order_col=order_col,
         )
 
-    writer = (
-        raw.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(raw.writeStream.foreachBatch(apply_batch), checkpoint, trigger_available_now)
 
 
 _TEMPLATE_LINES_SCHEMA = "doc_id string, source string, line string"
@@ -420,8 +380,9 @@ def start_template_census_stream(
 ):
     """Incremental log-template census: each micro-batch of raw lines
     collapses to its PARTIAL census — (template, source, n_lines,
-    example) — appended to a partials table; merge_template_census
-    reads the final census off the partials. The census is a mergeable
+    example) — written to the partials table's batch_id=<batch id>
+    partition (a replayed batch overwrites its own partials);
+    merge_template_census reads the final census off the partials. The census is a mergeable
     sketch (counts add, distinct-source unions, min-example folds), so
     the merged result is independent of how the stream was
     micro-batched — the determinism the oracle pins. This is the
@@ -448,18 +409,15 @@ def start_template_census_stream(
                 F.min("line").alias("example"),
             )
         )
-        part.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(partials_path)
+        (
+            part.withColumn("batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(partials_path)
+        )
 
-    writer = (
-        raw.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(raw.writeStream.foreachBatch(write_batch), checkpoint, trigger_available_now)
 
 
 def merge_template_census(spark: SparkSession, partials_path: str) -> DataFrame:

@@ -77,8 +77,7 @@ class TestParseOperator:
 
     def test_token_invariant_all_rows(self, spark, gen):
         pdf, raw = gen
-        parsed = parse_op.parse_sequences(raw, fmt=FORMAT_COMBINED, carry_tokens=True)
-        checked = parse_op.validate_tokens(parsed)
+        checked = parse_op.parse(parse_op.token_column(raw), FORMAT_COMBINED, carry_tokens=True, validate=True)
         assert checked.filter(~F.col("token_ok")).count() == 0
 
     def test_json_output_key_omission(self, tagged):

@@ -38,7 +38,7 @@ def test_stream_matches_batch(spark, source_dir, tmp_path_factory):
 
     got = io.read(spark, "events_stream")
     assert got.count() == len(pdf)
-    assert got.select("batch_id").distinct().count() >= 2  # true micro-batching
+    assert got.select("chunk_id").distinct().count() >= 2  # true micro-batching
 
     # same routing as batch plan over the same input
     from redeye_spark.plans.pipeline import build_tagged
@@ -295,3 +295,109 @@ def test_text_tail_stream_two_appends(spark, tmp_path_factory):
 
     sample = _json.loads(js.limit(1).collect()[0]["value"])
     assert sample["@version"] == "1" and "@timestamp" in sample
+
+
+def _forget_last_commit(ckpt):
+    """Drop the checkpoint's last commit marker, as a crash between a
+    micro-batch's sink write and its commit would: the restart replays
+    that batch with the same id and the same files."""
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    os.remove(os.path.join(commits, str(last)))
+    os.remove(os.path.join(commits, f".{last}.crc"))
+
+
+def test_replayed_batch_overwrites_its_rows(spark, source_dir, tmp_path_factory):
+    base, pdf = source_dir
+    out = str(tmp_path_factory.mktemp("replay_out"))
+    io, ckpt = ParquetIO(out), os.path.join(out, "_ckpt")
+    cfg = PipelineConfig(fmt=FORMAT_COMBINED)
+    assert stream_mod.start_pipeline_stream(spark, base, io, ckpt, cfg).awaitTermination(300)
+    _forget_last_commit(ckpt)
+    assert stream_mod.start_pipeline_stream(spark, base, io, ckpt, cfg).awaitTermination(300)
+
+    got = io.read(spark, "events_stream")
+    assert got.count() == len(pdf)
+    assert got.select("doc_id").distinct().count() == len(pdf)
+    assert got.select("chunk_id").distinct().count() >= 2
+    assert io.read(spark, "agg_counts_stream").agg(F.sum("n")).collect()[0][0] == len(pdf)
+
+
+def _tail_segment(watch):
+    """31 lines into ``watch``/seg0.log: 30 Combined lines, one malformed."""
+    os.makedirs(watch, exist_ok=True)
+    lines = gen_frame(30, fmt=FORMAT_COMBINED, seed=11, malformed_rate=0.0)["line"].tolist()
+    with open(f"{watch}/seg0.log", "w") as f:
+        f.write("\n".join(lines + ["not a log line"]) + "\n")
+
+
+def test_text_tail_replayed_segment_overwrites_its_rows(spark, tmp_path_factory):
+    base = str(tmp_path_factory.mktemp("tail_replay"))
+    watch, out, ckpt = f"{base}/spool", f"{base}/out", f"{base}/ckpt"
+    _tail_segment(watch)
+    cfg = PipelineConfig(fmt=FORMAT_COMBINED)
+    assert stream_mod.start_text_tail_stream(spark, watch, out, ckpt, cfg).awaitTermination(300)
+    _forget_last_commit(ckpt)
+    assert stream_mod.start_text_tail_stream(spark, watch, out, ckpt, cfg).awaitTermination(300)
+
+    assert spark.read.parquet(out + "/events").count() == 31
+    assert spark.read.text(out + "/events_json").count() == 30
+    assert spark.read.parquet(out + "/agg_counts").agg(F.sum("n")).collect()[0][0] == 31
+
+
+def test_text_tail_parses_each_line_once(spark, tmp_path_factory):
+    """Across the SQL executions of a one-segment tail run, exactly one
+    plan holds a Python map: one MapInArrow (the parse, fed the line
+    strings directly) and no MapInPandas, and its kernel output is the
+    segment's 31 lines — the JSON mirror and the aggregate read the
+    committed events instead of re-running the parse."""
+    base = str(tmp_path_factory.mktemp("tail_once"))
+    watch = f"{base}/spool"
+    _tail_segment(watch)
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def execution_ids():
+        bus.waitUntilEmpty()
+        execs = store.executionsList()
+        return {execs.apply(i).executionId() for i in range(execs.size())}
+
+    seen = execution_ids()
+    q = stream_mod.start_text_tail_stream(
+        spark, watch, f"{base}/out", f"{base}/ckpt", PipelineConfig(fmt=FORMAT_COMBINED)
+    )
+    assert q.awaitTermination(300)
+    python_maps = []
+    for eid in sorted(execution_ids() - seen):
+        nodes = store.planGraph(eid).allNodes()
+        nodes = [nodes.apply(i) for i in range(nodes.size())]
+        maps = [n for n in nodes if n.name().startswith("MapIn")]
+        if maps:
+            python_maps.append((eid, maps))
+    assert len(python_maps) == 1, [e for e, _ in python_maps]
+    eid, maps = python_maps[0]
+    assert [n.name() for n in maps] == ["MapInArrow"]
+    metrics = store.executionMetrics(eid)
+    out_rows = [
+        metrics.get(m.accumulatorId()).get()
+        for m in (maps[0].metrics().apply(i) for i in range(maps[0].metrics().size()))
+        if m.name() == "number of output rows"
+    ]
+    assert out_rows == ["31"]
+
+
+def test_text_tail_blank_segment_commits_nothing(spark, tmp_path_factory):
+    """A micro-batch of blank lines only commits no rows and writes no
+    JSON, and the next segment still lands."""
+    base = str(tmp_path_factory.mktemp("tail_blank"))
+    watch, out, ckpt = f"{base}/spool", f"{base}/out", f"{base}/ckpt"
+    os.makedirs(watch)
+    with open(f"{watch}/blank.log", "w") as f:
+        f.write("\n   \n\n")
+    cfg = PipelineConfig(fmt=FORMAT_COMBINED)
+    assert stream_mod.start_text_tail_stream(spark, watch, out, ckpt, cfg).awaitTermination(300)
+    assert not os.path.exists(out + "/events_json")
+    _tail_segment(watch)
+    assert stream_mod.start_text_tail_stream(spark, watch, out, ckpt, cfg).awaitTermination(300)
+    assert spark.read.parquet(out + "/events").count() == 31
+    assert spark.read.text(out + "/events_json").count() == 30

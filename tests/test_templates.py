@@ -130,3 +130,17 @@ class TestStreamCensus:
         bids = spark.read.parquet(str(tmp_path / "part_a")).select(
             "batch_id").distinct().count()
         assert bids > 1
+
+    def test_replayed_batch_overwrites_its_partials(self, spark, tmp_path):
+        from redeye_spark.streaming import stream as stream_mod
+        from tests.test_streaming import _forget_last_commit
+
+        rows = [(str(i), f"s{i % 3}", f"GET /api/v{i % 2}/item/{i} ok {i % 7}")
+                for i in range(400)]
+        _lines(spark, rows).repartition(4).write.parquet(str(tmp_path / "in"))
+        src, parts, ckpt = str(tmp_path / "in"), str(tmp_path / "part"), str(tmp_path / "ckpt")
+        assert stream_mod.start_template_census_stream(spark, src, parts, ckpt).awaitTermination(300)
+        _forget_last_commit(ckpt)
+        assert stream_mod.start_template_census_stream(spark, src, parts, ckpt).awaitTermination(300)
+        census = stream_mod.merge_template_census(spark, parts)
+        assert census.agg(F.sum("n_lines")).collect()[0][0] == 400

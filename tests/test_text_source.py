@@ -155,6 +155,13 @@ class TestParsePathReport:
         assert res.parse_path == "general" and res.fallback_reason == "plan root is Filter, not a file scan"
         assert (res.rows_in, res.rows_err) == (2, 0)
 
+    def test_line_strings_take_the_string_column(self, spark, tmp_path):
+        _write(tmp_path / "web.log", LINE + b"\nnot a log line\n" + LINE2 + b"\n")
+        lines = number_text_lines(textfiles.text_scan(spark, str(tmp_path)))
+        parsed, parse_path, why = parse_input(spark, lines, PipelineConfig(carry_tokens=True))
+        assert (parse_path, why) == ("general", "input is (doc_id, source, line) strings, not token arrays")
+        pd.testing.assert_frame_equal(_frame(parsed), _frame(_scan_rows(spark, str(tmp_path))))
+
     def test_parquet_scan_reasons(self, spark, tmp_path):
         from redeye_spark.schema import RAW_SEQUENCES
 
