@@ -1,2 +1,2 @@
 """Vectorized (pandas/Arrow) scalar function kernels — the Python side of
-the pipeline's single mapInPandas exchange, testable without Spark."""
+the pipeline's single mapInArrow hop, testable without Spark."""

@@ -1,8 +1,8 @@
 """Vectorized NCSA Common/Combined log-line parsing with redeye semantics.
 
 Pure pandas/numpy — no Spark imports — so the semantic core is unit-testable
-in microseconds and is exactly what the Arrow-batched mapInPandas operator
-executes per batch.
+in microseconds and is exactly what the Arrow-batched mapInArrow parse
+operator (operators.parse_op) executes per batch.
 
 Reference semantics (all cites into /root/reference/src/redeye/):
   * regexes: parser.rs:122-134 (Common), parser.rs:257-271 (Combined) —

@@ -39,8 +39,8 @@ def build_arg_parser() -> argparse.ArgumentParser:
     fmt.add_argument(
         "--grok", metavar="PATTERN", default=None,
         help="parse an ad-hoc format with a grok expression "
-             "(%%{NAME:field} references, functions/grok.py): detokenize, "
-             "then extract fields JVM-side; rows that do not match land "
+             "(%%{NAME:field} references, functions/grok.py): read the "
+             "lines, then extract fields JVM-side; rows that do not match land "
              "with grok_match=false instead of the fixed-format taxonomy",
     )
     p.add_argument("--input", required=True, help="input table path (tokenized sequences)")
@@ -112,22 +112,25 @@ def main(argv: list[str] | None = None) -> int:
 
         from redeye_spark.functions.grok import grok_extract
 
-        width = args.parallelism or spark.sparkContext.defaultParallelism
+        # grok extracts fields JVM-side, so the input crosses to Python
+        # at most once, to read its line strings
         if args.text_input:
-            # straight to the line strings — tokenizing and immediately
-            # detokenizing would cost two full Python exchanges for
-            # nothing (grok extracts from the line JVM-side); local files
-            # are already read by `width` tasks, other files need a spread
+            # local files are read by `width` tasks; the window's
+            # numbered lines of other files need a spread
             from redeye_spark.operators.tokenize_op import text_lines_df
             from redeye_spark.sources.textfiles import tagged
 
+            width = args.parallelism or spark.sparkContext.defaultParallelism
             lines = text_lines_df(spark, args.input, width)
             if tagged(lines)[0] is None:
                 lines = lines.repartition(width)
         else:
-            from redeye_spark.operators.tokenize_op import detokenize_lines
+            # the parse's line source: parquet_files for a bare local
+            # scan, --parallelism repartitions the tokens before the hop
+            from redeye_spark.operators import parse_op
+            from redeye_spark.plans.pipeline import line_source
 
-            lines = detokenize_lines(spark.read.parquet(args.input)).repartition(width)
+            lines = parse_op.lines(line_source(spark, spark.read.parquet(args.input), cfg)[0])
         extracted = grok_extract(lines, args.grok, keep=["doc_id", "source"])
         io.write(extracted, "events_grok")
         back = io.read(spark, "events_grok")

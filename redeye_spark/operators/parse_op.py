@@ -1,10 +1,13 @@
-"""The parse operator: log lines -> parsed events in one Python hop.
+"""Line operators: log lines -> parsed events, line strings or token
+arrays, each in one Python hop.
 
-One mapInArrow call reads lines from a pluggable source, then regex
-parses and error-classifies them, Arrow-batched, so every input shape
-crosses the JVM<->Python boundary exactly once. This lifts the
-reference's per-line loop (src/bin/redeye.rs:82-89) into a single
-vectorized distributed operator. Sources:
+Every JVM<->Python hop over log lines runs one worker function (_hop):
+a mapInArrow that reads lines from a pluggable source and hands each
+Arrow batch to an emitter, so every input shape crosses the boundary
+exactly once. The emitters are ``parse`` (regex parse and error
+classification, the reference's per-line loop, src/bin/redeye.rs:82-89,
+as one vectorized distributed operator), ``lines`` and ``tokens``.
+Sources:
 
   token_column    (doc_id, tokens, n_tok, source) rows from any plan
   parquet_files   the same shape read by the worker from local parquet
@@ -22,11 +25,11 @@ from __future__ import annotations
 
 from typing import Callable, Iterator
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from ..functions.logparse import FORMAT_COMMON
 from ..functions.worker import steady_import_caches
-from ..schema import parsed_schema
+from ..schema import LINES, RAW_SEQUENCES, parsed_schema
 
 # (frame the mapInArrow runs over, worker-side function from its input
 # batches to (doc_id, source, line, tokens-or-None) Arrow arrays)
@@ -100,6 +103,28 @@ def parquet_files(spark, files: list[str], batch_rows: int = 10_000) -> LineSour
     return frame, read
 
 
+def _hop(source: LineSource, schema, emit) -> DataFrame:
+    """The one JVM<->Python hop: a mapInArrow over the source's frame
+    whose worker reads the source's batches and yields
+    ``emit(doc_id, source, lines, tokens-or-None)`` for each non-empty
+    one. Every line operator (parse, lines, tokens) runs on it."""
+    frame, read = source
+
+    def fn(batches):
+        steady_import_caches()
+        import pyarrow as pa
+
+        # One compute thread per worker: task-level parallelism already
+        # fills the cores; 32 workers x default 32-thread arrow pools
+        # oversubscribe catastrophically.
+        pa.set_cpu_count(1)
+        for doc_id, src, lines, toks in read(batches):
+            if len(lines):
+                yield emit(doc_id, src, lines, toks)
+
+    return frame.mapInArrow(fn, schema=schema)
+
+
 def parse(
     source: LineSource,
     fmt: str = FORMAT_COMMON,
@@ -121,41 +146,62 @@ def parse(
     so for pre-trimmed lines it holds for every row, dead-letter rows
     included.
     """
-    from pyspark.sql import types as T
-
-    frame, read = source
     schema = parsed_schema(carry_tokens)
     if validate:
         schema = T.StructType(schema.fields + [T.StructField("token_ok", T.BooleanType())])
-    names = [f.name for f in schema.fields]
+    names = schema.names
 
-    def fn(batches):
-        steady_import_caches()
-        import pyarrow as _pa
+    def emit(doc_id, src, lines, toks):
+        import pyarrow as pa
 
         from ..functions.logparse import parse_lines_arrow
         from ..functions.tokens import tokens_equal_arrow, tokens_list_from_string_array
 
-        # One compute thread per worker: task-level parallelism already
-        # fills the cores; 32 workers x default 32-thread arrow pools
-        # oversubscribe catastrophically.
-        _pa.set_cpu_count(1)
-        token_type = _pa.list_(_pa.int32())
-        for doc_id, src, lines, toks in read(batches):
-            if len(lines) == 0:
-                continue
-            cols = parse_lines_arrow(lines, fmt)
-            arrays = [doc_id, src]
-            if toks is None and (carry_tokens or validate):
-                toks = tokens_list_from_string_array(lines)
-            if carry_tokens:
-                arrays.append(toks if toks.type == token_type else toks.cast(token_type))
-            arrays.extend(cols.values())
-            if validate:
-                arrays.append(_pa.array(tokens_equal_arrow(cols["message"], toks)))
-            yield _pa.RecordBatch.from_arrays(arrays, names)
+        cols = parse_lines_arrow(lines, fmt)
+        arrays = [doc_id, src]
+        if toks is None and (carry_tokens or validate):
+            toks = tokens_list_from_string_array(lines)
+        if carry_tokens:
+            token_type = pa.list_(pa.int32())
+            arrays.append(toks if toks.type == token_type else toks.cast(token_type))
+        arrays.extend(cols.values())
+        if validate:
+            arrays.append(pa.array(tokens_equal_arrow(cols["message"], toks)))
+        return pa.RecordBatch.from_arrays(arrays, names)
 
-    return frame.mapInArrow(fn, schema=schema)
+    return _hop(source, schema, emit)
+
+
+def lines(source: LineSource) -> DataFrame:
+    """A line source -> (doc_id, source, line) rows (schema.LINES), for
+    consumers that want raw lines without the fixed-format parser (the
+    text_lines_df reader, the --grok CLI path)."""
+
+    def emit(doc_id, src, lines, toks):
+        import pyarrow as pa
+
+        return pa.RecordBatch.from_arrays([doc_id, src, lines], LINES.names)
+
+    return _hop(source, LINES, emit)
+
+
+def tokens(source: LineSource) -> DataFrame:
+    """A line source -> the pipeline's input shape (doc_id, tokens,
+    n_tok, source) (schema.RAW_SEQUENCES). A token column is built
+    buffer-level from the line bytes: no per-row Python anywhere."""
+
+    def emit(doc_id, src, lines, toks):
+        import numpy as np
+        import pyarrow as pa
+
+        from ..functions.tokens import tokens_list_from_string_array
+
+        if toks is None:
+            toks = tokens_list_from_string_array(lines)
+        n_tok = pa.array(np.diff(toks.offsets.to_numpy()).astype(np.int32))
+        return pa.RecordBatch.from_arrays([doc_id, toks, n_tok, src], RAW_SEQUENCES.names)
+
+    return _hop(source, RAW_SEQUENCES, emit)
 
 
 def parse_sequences(
@@ -180,19 +226,6 @@ def parse_sequence_files(
     return parse(parquet_files(spark, files, batch_rows), fmt, carry_tokens)
 
 
-def parse_raw_lines(
-    df: DataFrame,
-    fmt: str = FORMAT_COMMON,
-    carry_tokens: bool = False,
-    num_partitions: int | None = None,
-    validate: bool = False,
-) -> DataFrame:
-    """(doc_id, source, line) -> parsed-event rows, identical to
-    ``tokenize_lines(df)`` piped through ``parse_sequences`` without the
-    token array ever crossing the JVM<->Python boundary mid-pipeline."""
-    return parse(string_column(df, num_partitions), fmt, carry_tokens, validate)
-
-
 def parquet_scan(df: DataFrame) -> tuple[list[str] | None, str | None]:
     """(data-file paths, None) if ``df`` is a bare, local, batch parquet
     scan of the RAW_SEQUENCES shape (no filters/projections/limits on
@@ -203,8 +236,6 @@ def parquet_scan(df: DataFrame) -> tuple[list[str] | None, str | None]:
     back to the general ``token_column`` path.
     """
     from py4j.protocol import Py4JError
-
-    from ..schema import RAW_SEQUENCES
 
     if df.isStreaming:
         return None, "streaming input"

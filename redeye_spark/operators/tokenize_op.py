@@ -1,90 +1,44 @@
-"""Line <-> token-array operators and the raw .log readers.
+"""The raw .log readers and the line -> token-array operator.
 
 tokenize_lines materializes the pipeline's input shape (BASELINE.json
 input_hint) from any DataFrame that carries raw line strings — e.g. the
 entry queries that derive deterministic log lines from the testdata
 `events` table. read_text_lines / text_lines_df read .log files in the
-Python worker (sources.textfiles) into the same shapes. Arrow-batched;
-byte-level work is vectorized in functions.tokens.
+Python worker (sources.textfiles) into the same shapes. Every Python
+hop here is one of operators.parse_op's line operators.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from pyspark.sql import DataFrame
 
-import numpy as np
-import pandas as pd
-import pyarrow as pa
-from pyspark.sql import DataFrame, types as T
-
-from ..functions.tokens import tokens_list_array, tokens_list_from_string_array
-from ..functions.worker import steady_import_caches
-from ..schema import RAW_SEQUENCES
 from ..sources import textfiles
-
-# text_lines_df's shape
-LINES = T.StructType([T.StructField(c, T.StringType(), False) for c in ("doc_id", "source", "line")])
+from . import parse_op
 
 
-def tokenize_lines(df: DataFrame, line_col: str = "line") -> DataFrame:
-    """(doc_id, source, <line_col>) -> (doc_id, tokens, n_tok, source).
+def tokenize_lines(df: DataFrame) -> DataFrame:
+    """(doc_id, source, line) -> (doc_id, tokens, n_tok, source).
 
-    The token column is built buffer-level (tokens_list_array carves the
-    Arrow StringArray's byte buffer into a list<int32> directly) — no
-    per-row Python .tolist() materialization anywhere in the batch.
+    The token column is built buffer-level (the Arrow StringArray's byte
+    buffer carved into a list<int32> directly) — no per-row Python
+    materialization anywhere in the batch.
     """
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        steady_import_caches()
-        for b in batches:
-            if len(b) == 0:
-                continue
-            toks = tokens_list_array(b[line_col])
-            lens = np.diff(toks.offsets.to_numpy(zero_copy_only=False)).astype("int32")
-            yield pd.DataFrame(
-                {
-                    "doc_id": b["doc_id"].reset_index(drop=True),
-                    "tokens": toks.to_pandas().reset_index(drop=True),
-                    "n_tok": pd.Series(lens),
-                    "source": b["source"].reset_index(drop=True),
-                }
-            )
-
-    return df.mapInPandas(fn, schema=RAW_SEQUENCES)
+    return parse_op.tokens(parse_op.string_column(df))
 
 
-def _emit_lines(doc_id, source, lines) -> pa.RecordBatch:
-    return pa.RecordBatch.from_arrays([doc_id, source, lines], ["doc_id", "source", "line"])
-
-
-def _emit_tokens(doc_id, source, lines) -> pa.RecordBatch:
-    toks = tokens_list_from_string_array(lines)
-    n_tok = pa.array(np.diff(toks.offsets.to_numpy()).astype(np.int32))
-    return pa.RecordBatch.from_arrays(
-        [doc_id, toks, n_tok, source], ["doc_id", "tokens", "n_tok", "source"]
-    )
-
-
-def _read_text(spark, path, num_tasks, schema, emit, fallback) -> DataFrame:
-    """Local uncompressed files: a mapInArrow over ``num_tasks`` byte
-    ranges (sources.textfiles), ``emit`` shaping each (doc_id, source,
-    line) batch. Other files: ``fallback`` over Spark's text scan and
-    the numbering window. The frame is marked either way (textfiles.tag)."""
+def _read_text(spark, path, num_tasks, emit, fallback) -> DataFrame:
+    """Local uncompressed files: ``emit`` (a parse_op line operator)
+    over ``num_tasks`` byte ranges (sources.textfiles). Other files:
+    ``fallback`` over Spark's text scan and the numbering window. The
+    frame is marked either way (textfiles.tag); a fallback mark also
+    carries the numbered (doc_id, source, line) frame, so the parse can
+    read those strings directly."""
     files, reason = textfiles.list_text_files(spark, path)
     if files is None:
-        df = fallback(number_text_lines(textfiles.text_scan(spark, path)))
-    else:
-        frame, read = textfiles.line_source(
-            spark, files, num_tasks or spark.sparkContext.defaultParallelism
-        )
-
-        def fn(batches):
-            steady_import_caches()
-            for doc_id, source, lines, _ in read(batches):
-                yield emit(doc_id, source, lines)
-
-        df = frame.mapInArrow(fn, schema=schema)
-    return textfiles.tag(df, files, reason)
+        numbered = number_text_lines(textfiles.text_scan(spark, path))
+        return textfiles.tag(fallback(numbered), None, reason, numbered)
+    n = num_tasks or spark.sparkContext.defaultParallelism
+    return textfiles.tag(emit(textfiles.line_source(spark, files, n)), files, None)
 
 
 def text_lines_df(spark, path: str, num_tasks: int | None = None) -> DataFrame:
@@ -110,7 +64,7 @@ def text_lines_df(spark, path: str, num_tasks: int | None = None) -> DataFrame:
     (compressed, non-local) take Spark's text scan and the per-file
     numbering window of number_text_lines, which holds each file on
     one reducer. Both give the same rows (sources.textfiles)."""
-    return _read_text(spark, path, num_tasks, LINES, _emit_lines, lambda df: df)
+    return _read_text(spark, path, num_tasks, parse_op.lines, lambda df: df)
 
 
 def number_text_lines(raw: DataFrame) -> DataFrame:
@@ -144,34 +98,9 @@ def read_text_lines(spark, path: str) -> DataFrame:
 
     The returned frame is marked as a text reader's output, so
     plans.pipeline parses it in the same Python call that reads the
-    files (parse path ``text_files``) instead of tokenizing here and
-    detokenizing there. A frame derived from it (filtered, projected,
-    chunked) is an ordinary plan and takes the general parse path."""
-    return _read_text(spark, path, None, RAW_SEQUENCES, _emit_tokens, tokenize_lines)
-
-
-def detokenize_lines(df: DataFrame, keep: tuple[str, ...] = ("doc_id", "source")) -> DataFrame:
-    """(doc_id, tokens, ..., source) -> (<keep...>, line): the standalone
-    inverse of tokenize_lines, for consumers that want raw lines WITHOUT
-    the fixed-format parser (e.g. the --grok CLI path, which extracts
-    fields JVM-side after this single Python exchange). Byte work is the
-    same zero-copy Arrow StringArray construction the parse fast path
-    uses (functions.tokens.detokenize)."""
-    from pyspark.sql import types as T
-
-    from ..functions.tokens import detokenize
-
-    out_schema = T.StructType(
-        [df.schema[c] for c in keep] + [T.StructField("line", T.StringType(), False)]
-    )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        steady_import_caches()
-        for b in batches:
-            if len(b) == 0:
-                continue
-            out = b[list(keep)].reset_index(drop=True)
-            out["line"] = detokenize(b["tokens"]).reset_index(drop=True)
-            yield out
-
-    return df.select(*keep, "tokens").mapInPandas(fn, schema=out_schema)
+    files (parse path ``text_files``), or for compressed and non-local
+    files from the numbered line strings (one hop, parse path
+    ``general``), instead of tokenizing here and detokenizing there. A
+    frame derived from it (filtered, projected, chunked) is an ordinary
+    plan and takes the general parse path over its token column."""
+    return _read_text(spark, path, None, parse_op.tokens, tokenize_lines)

@@ -11,7 +11,8 @@ single mapInArrow parse inside whole-stage codegen:
                                           each parse task (.log input)
     parquet files                         read by each parse task
     any other plan's line strings         (doc_id, source, line) rows,
-                                          e.g. a streaming tail batch
+                                          e.g. a streaming tail batch or
+                                          numbered .gz lines
     any other plan's token column         round-robin repartition(n)
   mapInArrow(source+parse+classify)     — the only Python hop; reused
                                           workers skip re-reading
@@ -22,7 +23,8 @@ single mapInArrow parse inside whole-stage codegen:
   write partitionBy(sink)               — single pass over the data; the
                                           per-sink and per-partition
                                           counts ride it (df.observe)
-  groupBy(sink,bucket,keys).count()     — salted, over the committed sink
+  groupBy(sink,bucket,keys).count()     — salted, over the committed sink,
+                                          under the session's AQE
 
 run_pipeline is the one commit function: a plain run is the case with
 no chunk id, and each chunk of plans.checkpoint.run_checkpointed is the
@@ -83,24 +85,29 @@ def parse_input(
                      token column (measured ~2x the parse kernel);
       general        anything else (streaming, filtered, in-memory,
                      non-local, compressed): the ``line`` column of a
-                     (doc_id, source, line) ``raw``, else its token
-                     column, from ``raw``'s own plan, round-robin
+                     (doc_id, source, line) ``raw`` or of the numbered
+                     lines behind a compressed or non-local
+                     read_text_lines frame, else ``raw``'s token column,
+                     from that frame's own plan, round-robin
                      repartitioned to cfg.num_partitions when set.
 
     Output rows are identical whichever path is taken."""
-    source, path, reason = _line_source(spark, raw, cfg)
+    source, path, reason = line_source(spark, raw, cfg)
     return parse_op.parse(source, fmt=cfg.fmt, carry_tokens=cfg.carry_tokens), path, reason
 
 
-def _line_source(spark: SparkSession, raw: DataFrame, cfg: PipelineConfig):
+def line_source(
+    spark: SparkSession, raw: DataFrame, cfg: PipelineConfig
+) -> tuple[parse_op.LineSource, str, str | None]:
+    """(the line source parse_input parses ``raw`` from, parse path,
+    why the general path); see parse_input."""
     text = textfiles.tagged(raw)
     if text is not None and text[0] is not None:
         n = cfg.num_partitions or spark.sparkContext.defaultParallelism
         return textfiles.line_source(spark, text[0], n), "text_files", None
-    lines = "line" in raw.columns
     if text is not None:
-        reason = f"text input: {text[1]}"
-    elif lines:
+        raw, reason = textfiles.tagged_lines(raw), f"text input: {text[1]}"
+    elif "line" in raw.columns:
         reason = "input is (doc_id, source, line) strings, not token arrays"
     elif cfg.num_partitions is not None:
         reason = f"num_partitions={cfg.num_partitions} asks for a round-robin repartition"
@@ -108,7 +115,7 @@ def _line_source(spark: SparkSession, raw: DataFrame, cfg: PipelineConfig):
         files, reason = parse_op.parquet_scan(raw)
         if files:
             return parse_op.parquet_files(spark, files), "parquet_files", None
-    read = parse_op.string_column if lines else parse_op.token_column
+    read = parse_op.string_column if "line" in raw.columns else parse_op.token_column
     return read(raw, cfg.num_partitions), "general", reason
 
 
@@ -255,32 +262,12 @@ def run_pipeline(
              options=events_writer_options)
 
     # The aggregate pass reads 4 narrow columns of the committed events
-    # table — a few % of its file bytes after pruning. The session's
-    # scan-split size is tuned for the parse stage (small splits smooth
-    # UDF waves); applying it here just multiplies per-task overhead
-    # (measured: 91 tasks to read 2.2 MB of pruned columns at 2 cores,
-    # 2.65 s). Large sequential splits are the right shape for a narrow
-    # columnar re-read at any scale (guide §6), so pin 128 MB around
-    # this pass and restore the caller's value after.
-    # Also: the read-back passes the writer's schema (skipping the
-    # footer-sampling inference job), and AQE is off for this one pass —
-    # its shuffle carries group-cardinality partial counts (bounded by
-    # the key space, never corpus-sized) over fixed 128 MB scan splits,
-    # so runtime re-planning buys nothing and each AQE stage otherwise
-    # costs an extra job boundary per run.
-    _SPLIT_KEY = "spark.sql.files.maxPartitionBytes"
-    _AQE_KEY = "spark.sql.adaptive.enabled"
-    prev_split = spark.conf.get(_SPLIT_KEY)
-    prev_aqe = spark.conf.get(_AQE_KEY)
-    spark.conf.set(_SPLIT_KEY, str(128 * 1024 * 1024))
-    spark.conf.set(_AQE_KEY, "false")
-    try:
-        events_back = io.read(spark, events_table, schema=tagged.schema).filter(in_chunk)
-        counts = agg_op.salted_counts(events_back, cfg.bucket_granularity, cfg.salt_buckets)
-        io.write(counts.select("*", *chunk_cols), agg_table, mode=write_mode, partition_by=agg_by)
-    finally:
-        spark.conf.set(_SPLIT_KEY, prev_split)
-        spark.conf.set(_AQE_KEY, prev_aqe)
+    # table, passing the writer's schema (no footer-sampling inference
+    # job), under the session's own AQE: it coalesces the reduce side
+    # to the few partitions the partial counts need.
+    events_back = io.read(spark, events_table, schema=tagged.schema).filter(in_chunk)
+    counts = agg_op.salted_counts(events_back, cfg.bucket_granularity, cfg.salt_buckets)
+    io.write(counts.select("*", *chunk_cols), agg_table, mode=write_mode, partition_by=agg_by)
 
     partitions = None
     if use_observe:

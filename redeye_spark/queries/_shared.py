@@ -174,10 +174,10 @@ def _parsed(spark: SparkSession, sf_dir: str, carry_tokens: bool = False,
         # line build + tokenize UDF single-core on the unsplittable
         # 1-file scan and (b) shuffled the per-byte token arrays (~5x
         # the line bytes). Tokenize+parse are fused into one Python hop
-        # (parse_raw_lines) — detokenize(tokenize(l)) == l exactly, so
-        # the result set (and every oracle hash) is unchanged.
-        return parse_op.parse_raw_lines(
-            _spark_lines(spark, sf_dir, fmt, spread=True),
+        # (the string_column source) — detokenize(tokenize(l)) == l
+        # exactly, so the result set (and every oracle hash) is unchanged.
+        return parse_op.parse(
+            parse_op.string_column(_spark_lines(spark, sf_dir, fmt, spread=True)),
             fmt=fmt, carry_tokens=carry_tokens,
         )
 

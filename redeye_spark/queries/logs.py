@@ -230,12 +230,12 @@ GROUP BY ROLLUP(method, protocol)
 def q_token_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-array equality invariant (FIXTURES §3.1) for every row.
 
-    Validation is fused into the parse hop (parse_raw_lines
+    Validation is fused into the parse hop (parse_op.parse
     validate=True): same tokens_equal(message, tokens) computation, but
     without shipping the full parsed frame + token arrays through a
     second mapInPandas just to compare two byte buffers."""
-    parsed = parse_op.parse_raw_lines(
-        _spark_lines(spark, sf_dir, spread=True),
+    parsed = parse_op.parse(
+        parse_op.string_column(_spark_lines(spark, sf_dir, spread=True)),
         carry_tokens=True, validate=True,
     )
     return parsed.select("doc_id", F.size("tokens").cast("long").alias("n_bytes"), "token_ok")

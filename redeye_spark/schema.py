@@ -25,6 +25,9 @@ RAW_SEQUENCES = T.StructType(
     ]
 )
 
+# Raw log lines with provenance (doc_id = <file>#<physical line>)
+LINES = T.StructType([T.StructField(c, T.StringType(), False) for c in ("doc_id", "source", "line")])
+
 # ---------------------------------------------------------------------------
 # Parsed events: carried-through input cols + union of both parsers' fields.
 # error_kind mirrors redeye's error taxonomy (types.rs:33-38): NULL = ok,
@@ -55,12 +58,13 @@ _PARSE_FIELDS = [
 
 
 def parsed_schema(carry_tokens: bool = True) -> T.StructType:
-    """Schema of the mapInPandas parse output.
+    """Schema of the parse operator's output (operators.parse_op.parse).
 
     carry_tokens=False drops the token array after parsing — at 10^12-row
     scale carrying the raw bytes through enrich/route doubles shuffle and
-    sink volume; the token-equality invariant is then checked as a separate
-    validation pass instead of being carried through the pipeline.
+    sink volume; the token-equality invariant is then checked inside the
+    parse hop (parse(..., validate=True)) instead of being carried through
+    the pipeline.
     """
     carried = [
         T.StructField("doc_id", T.StringType(), False),

@@ -1,10 +1,14 @@
-"""SparkSession construction with the pipeline's tuned configuration.
+"""SparkSession construction with the pipeline's tuned configuration,
+sized for the host it runs on.
 
 The Arrow batch size is the Spark analog of redeye's --input-buffer
 (src/bin/redeye.rs:47-53): it bounds the unit of work crossing the
-JVM→Python boundary. AQE is on for runtime coalesce + skew-join splitting;
-hot-key *aggregation* skew is additionally handled by explicit salting in
-operators/aggregate.py (north_rule requires explicit skew mitigation).
+JVM→Python boundary. AQE is on for runtime coalesce + skew-join
+splitting, and the pipeline runs under it as configured here (it sets
+no session conf of its own); hot-key *aggregation* skew is additionally
+handled by explicit salting in operators/aggregate.py (north_rule
+requires explicit skew mitigation). File scans keep Spark's default
+split size: both parse fast paths read their own files.
 """
 
 from __future__ import annotations
@@ -22,9 +26,6 @@ DEFAULT_CONF = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Parquet scans: keep splits big enough that the regex UDF dominates,
-    # not task scheduling; 128 MiB default is right at cluster scale.
-    "spark.sql.files.maxPartitionBytes": "134217728",
     "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
     # NOTE: partitionOverwriteMode is set PER WRITE in sources/io.py:
     # plain overwrite uses static (a global dynamic default would leave
@@ -59,8 +60,6 @@ _TMPFS = "/dev/shm"
 
 
 def _local_dir() -> str | None:
-    import tempfile
-
     if os.path.isdir(_TMPFS) and os.access(_TMPFS, os.W_OK):
         d = os.path.join(_TMPFS, "spark-local")
         os.makedirs(d, exist_ok=True)
@@ -161,12 +160,6 @@ def get_spark(
     if master:
         builder = builder.master(master)
     conf = dict(DEFAULT_CONF)
-    if os.environ.get("REDEYE_EVENTLOG"):
-        # measurement hook (guide §1): event logs for any session,
-        # including bench exec-workers, without touching the harness
-        os.makedirs("/tmp/spark-events", exist_ok=True)
-        conf["spark.eventLog.enabled"] = "true"
-        conf["spark.eventLog.dir"] = "file:///tmp/spark-events"
     ld = _local_dir()
     if ld:
         conf.setdefault("spark.local.dir", ld)

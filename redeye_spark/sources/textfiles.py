@@ -5,8 +5,8 @@ used to be a Spark text scan, a per-file numbering window and a
 tokenize hop before the parse. Here the driver only lists the files;
 each task reads its own byte range of them with plain file reads,
 splits and numbers the lines with numpy, and hands Arrow arrays
-straight to whatever runs in the same Python call (the parse operator,
-or the tokenize/line emitters in operators.tokenize_op).
+straight to whatever runs in the same Python call (one of the line
+operators of operators.parse_op: parse, lines or tokens).
 
 Line semantics are Spark's text reader (Hadoop LineRecordReader with
 the default delimiter), so output rows are identical to the scan path:
@@ -58,15 +58,21 @@ class TextFiles:
     sizes: tuple[int, ...]  # bytes, at listing time
 
 
-def text_scan(spark, path):
-    """Spark's text scan as (_file, line): the fallback source, and the
-    input of operators.tokenize_op.number_text_lines."""
+def file_lines(text):
+    """A Spark text reader's frame (batch or streaming) as (_file, line),
+    _file being the file URI without its scheme: the doc_id prefix of
+    operators.tokenize_op.number_text_lines."""
     from pyspark.sql import functions as F
 
-    return spark.read.text(path).select(
+    return text.select(
         F.regexp_replace(F.input_file_name(), FILE_SCHEME, "").alias("_file"),
         F.col("value").alias("line"),
     )
+
+
+def text_scan(spark, path):
+    """Spark's text scan as (_file, line): the fallback source."""
+    return file_lines(spark.read.text(path))
 
 
 def _codec_suffixes(spark) -> tuple[str, ...]:
@@ -97,17 +103,27 @@ def list_text_files(spark, path) -> tuple[TextFiles | None, str | None]:
     return TextFiles(tuple(uris), tuple(paths), tuple(sizes)), None
 
 
-def tag(df, files: TextFiles | None, reason: str | None):
-    """Mark ``df`` as the unmodified output of a text reader. DataFrames
-    are immutable and every transformation returns a new object, so the
-    mark never survives a filter, projection or union."""
-    df._redeye_text_files = (files, reason)
+def tag(df, files: TextFiles | None, reason: str | None, lines=None):
+    """Mark ``df`` as the unmodified output of a text reader; a fallback
+    read (``files`` None) also records its numbered (doc_id, source,
+    line) frame. DataFrames are immutable and every transformation
+    returns a new object, so the mark never survives a filter,
+    projection or union."""
+    df._redeye_text_files = (files, reason, lines)
     return df
 
 
 def tagged(df) -> tuple[TextFiles | None, str | None] | None:
     """(files, fallback reason) if ``df`` is a text reader's own output."""
-    return getattr(df, "_redeye_text_files", None)
+    mark = getattr(df, "_redeye_text_files", None)
+    return mark and mark[:2]
+
+
+def tagged_lines(df):
+    """The numbered (doc_id, source, line) frame behind a fallback text
+    read, else None."""
+    mark = getattr(df, "_redeye_text_files", None)
+    return mark and mark[2]
 
 
 def byte_ranges(sizes, n: int) -> list[list[tuple[int, int, int]]]:

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..plans.pipeline import PipelineConfig, build_tagged, run_pipeline
 from ..schema import RAW_SEQUENCES
+from ..sources import textfiles
 from ..sources.io import ParquetIO, TableIO
 
 
@@ -103,16 +104,7 @@ def start_text_tail_stream(
 
     cfg = cfg or PipelineConfig()
     io = ParquetIO(out_dir)
-    raw_lines = (
-        spark.readStream.format("text")
-        .load(watch_dir)
-        .select(
-            F.regexp_replace(
-                F.input_file_name(), r"^[a-z0-9+.-]+:(//)?", ""
-            ).alias("_file"),
-            F.col("value").alias("line"),
-        )
-    )
+    raw_lines = textfiles.file_lines(spark.readStream.format("text").load(watch_dir))
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
         session = batch_df.sparkSession

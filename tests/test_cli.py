@@ -151,6 +151,31 @@ class TestTextInput:
         assert ok["remote_host"] == "9.9.9.9" and ok["status_code"] == 200
         assert rows[f"{logs}/web.log#2"]["sink"] == "dead_letter"
 
+    def test_cli_grok_text_input_counts_every_line(self, spark, tmp_path, capsys):
+        """--grok --text-input over plain .log files (read by the parse
+        tasks) and over a directory that also holds a .log.gz (Spark's
+        text scan): every non-blank line is counted, once."""
+        import gzip
+
+        import redeye_spark.job as job_mod
+
+        ok = '9.9.9.9 - alice [10/Oct/2000:13:55:36 -0700] "GET /x HTTP/1.0" 200 99'
+        logs = tmp_path / "logs"; logs.mkdir()
+        (logs / "web.log").write_text(ok + "\n\nnot a log line\n")
+        pattern = r'%{IPORHOST:host} %{USER:ident} %{USER:user} \[%{HTTPDATE:ts}\] "%{WORD:method} .*'
+
+        def run(out):
+            assert job_mod.main(["--grok", pattern, "--text-input", "--input", str(logs),
+                                 "--output", str(tmp_path / out), "--parallelism", "2"]) == 0
+            return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+        assert run("plain") == {"rows_in": 2, "rows_ok": 1, "rows_err": 1}
+        (logs / "old.log.gz").write_bytes(gzip.compress((ok + "\n   \n" + ok + "\nbad\n").encode()))
+        assert run("gz") == {"rows_in": 5, "rows_ok": 3, "rows_err": 2}
+        ids = {r["doc_id"] for r in spark.read.parquet(str(tmp_path / "gz" / "events_grok")).collect()}
+        assert ids == {f"{logs}/web.log#1", f"{logs}/web.log#3",
+                       f"{logs}/old.log.gz#1", f"{logs}/old.log.gz#3", f"{logs}/old.log.gz#4"}
+
     def test_same_basename_in_two_dirs_does_not_collide(self, spark, tmp_path):
         from redeye_spark.operators.tokenize_op import read_text_lines
 

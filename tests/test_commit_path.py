@@ -80,6 +80,28 @@ def test_chunk_commit_launches_no_extra_jobs(spark, raw, tmp_path, monkeypatch):
     assert 0 < chunk <= plain
 
 
+def test_aggregate_runs_under_the_session_aqe(spark, raw, tmp_path):
+    """run_pipeline sets no conf around its aggregate pass: at 200
+    shuffle partitions the session's AQE coalesces the salted aggregate,
+    so the table has at most one file per core, and its rows equal a
+    4-partition run's."""
+    key = "spark.sql.shuffle.partitions"
+    cfg = PipelineConfig(fmt=FORMAT_COMBINED)
+    before = spark.conf.get(key)
+    tables = {}
+    try:
+        for n in (200, 4):
+            spark.conf.set(key, str(n))
+            io = ParquetIO(str(tmp_path / str(n)))
+            run_pipeline(spark, raw, io, cfg)
+            tables[n] = io.read(spark, "agg_counts").toPandas()
+    finally:
+        spark.conf.set(key, before)
+    files = list((tmp_path / "200" / "agg_counts").glob("part-*.parquet"))
+    assert 0 < len(files) <= spark.sparkContext.defaultParallelism, len(files)
+    pd.testing.assert_frame_equal(_sorted(tables[200], AGG_KEY), _sorted(tables[4], AGG_KEY))
+
+
 def test_resume_refuses_a_config_that_changes_the_output(spark, raw, tmp_path):
     cfg = PipelineConfig(fmt=FORMAT_COMBINED)
     io, ckpt = ParquetIO(str(tmp_path / "out")), str(tmp_path / "ck")

@@ -258,6 +258,34 @@ class TestTokens:
         with pytest.raises(ValueError):
             tok.detokenize(pd.Series([np.array([72, 300], dtype=np.int32)]))
 
+    def test_string_array_tokens_equal_pandas_tokens(self):
+        """tokens_list_from_string_array (the Arrow-input carve the line
+        operators use) gives the same list<int32> column as
+        tokens_list_array: ASCII, multi-byte UTF-8, empty strings, nulls
+        (rendered as "None") and sliced arrays."""
+        import pyarrow as pa
+
+        cases = [
+            [COMMON_LINE, "a", "abc"],
+            ["héllo wörld", "日本語", "emoji 🙂"],
+            ["", "x", "", ""],
+            ["a", None, "日本", None],
+            [],
+        ]
+        for values in cases:
+            got = tok.tokens_list_from_string_array(pa.array(values, type=pa.string()))
+            want = tok.tokens_list_array(pd.Series(values, dtype=object))
+            assert got.to_pylist() == want.to_pylist(), values
+        assert tok.tokens_list_from_string_array(pa.array([None], pa.string())).to_pylist() == [
+            list(b"None")
+        ]
+        whole = pa.array(["skip", "héllo", "", "wörld", "tail"], type=pa.string())
+        for start, length in [(1, 3), (2, 2), (4, 1), (0, 0)]:
+            part = whole.slice(start, length)
+            got = tok.tokens_list_from_string_array(part)
+            assert got.to_pylist() == tok.tokens_list_array(part.to_pandas()).to_pylist()
+            assert got.to_pylist() == [list(v.encode()) for v in part.to_pylist()]
+
 
 def test_batch_mixed_errors_classified():
     lines = pd.Series(

@@ -140,6 +140,17 @@ class TestRowsIdenticalToScanPath:
         assert set(got["doc_id"]) == {f"{tmp_path}/plain.log#1", f"{tmp_path}/old.log.gz#1", f"{tmp_path}/old.log.gz#3"}
 
 
+    def test_gz_fallback_parses_in_one_hop(self, spark, tmp_path):
+        """A compressed input reaches the parse as its numbered line
+        strings: the plan holds one MapInArrow and no MapInPandas."""
+        _write(tmp_path / "old.log.gz", gzip.compress(LINE + b"\n" + LINE2 + b"\n"))
+        raw = read_text_lines(spark, str(tmp_path))
+        parsed = parse_input(spark, raw, PipelineConfig(num_partitions=2))[0]
+        plan = parsed._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan, plan
+        assert parsed.count() == 2
+
+
 class TestParsePathReport:
     def test_text_files_for_read_text_lines_and_general_when_filtered(self, spark, tmp_path):
         logs = tmp_path / "logs"
