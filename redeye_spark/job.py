@@ -55,9 +55,11 @@ def build_arg_parser() -> argparse.ArgumentParser:
     p.add_argument("--bucket", default="hour", choices=["minute", "hour", "day"])
     p.add_argument(
         "--arrow-batch-rows", type=int, default=None,
-        help="rows per Arrow batch crossing the JVM->Python boundary — the "
-             "analog of redeye's --input-buffer/--output-buffer "
-             "(src/bin/redeye.rs:47-53); default from session.py",
+        help="rows per Arrow batch crossing the JVM->Python boundary or "
+             "read by the parse tasks from tokenized parquet — the analog "
+             "of redeye's --input-buffer/--output-buffer "
+             "(src/bin/redeye.rs:47-53); default from session.py. Raw text "
+             "input is read in 1 MiB blocks regardless",
     )
     p.add_argument(
         "--json-sink", action="store_true",
@@ -96,11 +98,10 @@ def main(argv: list[str] | None = None) -> int:
         )
     cfg = PipelineConfig(
         fmt=FORMAT_COMBINED if args.combined_format else FORMAT_COMMON,
-        # text mode: the parse task count. Local uncompressed files are
-        # cut into this many byte ranges, each read by its parse task;
-        # other text files (.gz, object stores) are numbered by a per-file
-        # window that holds each file on ONE reducer, and their lines are
-        # spread round-robin over this many tasks
+        # text mode: local uncompressed files are cut into this many byte
+        # ranges, each read by its parse task; a local .gz/.bz2 file is
+        # one task's piece, and other files (object stores, other codecs)
+        # add one row per file to the same parse stage
         num_partitions=args.parallelism
         or (spark.sparkContext.defaultParallelism if args.text_input else None),
         bucket_granularity=args.bucket,
@@ -115,15 +116,9 @@ def main(argv: list[str] | None = None) -> int:
         # grok extracts fields JVM-side, so the input crosses to Python
         # at most once, to read its line strings
         if args.text_input:
-            # local files are read by `width` tasks; the window's
-            # numbered lines of other files need a spread
             from redeye_spark.operators.tokenize_op import text_lines_df
-            from redeye_spark.sources.textfiles import tagged
 
-            width = args.parallelism or spark.sparkContext.defaultParallelism
-            lines = text_lines_df(spark, args.input, width)
-            if tagged(lines)[0] is None:
-                lines = lines.repartition(width)
+            lines = text_lines_df(spark, args.input, cfg.num_partitions)
         else:
             # the parse's line source: parquet_files for a bare local
             # scan, --parallelism repartitions the tokens before the hop

@@ -13,7 +13,7 @@ Sources:
   parquet_files   the same shape read by the worker from local parquet
   string_column   (doc_id, source, line) rows from any plan
   text files      raw .log files read, split and numbered by the worker
-                  (sources.textfiles.line_source)
+                  (sources.textfiles)
 
 The worker function first calls functions.worker.steady_import_caches:
 PySpark invalidates the import caches before every task, and on CPython
@@ -59,11 +59,9 @@ def token_column(df: DataFrame, num_partitions: int | None = None) -> LineSource
     return df, read
 
 
-def string_column(df: DataFrame, num_partitions: int | None = None) -> LineSource:
+def string_column(df: DataFrame) -> LineSource:
     """Lines straight from the ``line`` column of (doc_id, source, line)
     rows: no token array ever crosses the boundary."""
-    if num_partitions:
-        df = df.repartition(num_partitions)
 
     def read(batches):
         for b in batches:
@@ -72,12 +70,14 @@ def string_column(df: DataFrame, num_partitions: int | None = None) -> LineSourc
     return df, read
 
 
-def parquet_files(spark, files: list[str], batch_rows: int = 10_000) -> LineSource:
+def parquet_files(spark, files: list[str]) -> LineSource:
     """Columnar-source lines (guide §8 'read your own slice'): each task
     reads whole parquet files of the input shape with pyarrow, so the
     token arrays go parquet -> Arrow -> parse with ZERO JVM row
     materialization (measured: the JVM->Python round trip of the token
-    column costs ~2x the parse kernel itself)."""
+    column costs ~2x the parse kernel itself). Batches hold the session's
+    spark.sql.execution.arrow.maxRecordsPerBatch rows, as Spark's own
+    Arrow batches do (no limit when it is not positive)."""
     # one file index per partition via a natively-partitioned range —
     # no exchange at all (a repartition here cost a 2-stage AQE job per
     # action; a python-RDD parallelize cost a pickled-RDD python round
@@ -86,6 +86,7 @@ def parquet_files(spark, files: list[str], batch_rows: int = 10_000) -> LineSour
     # retry: each task re-reads the same file.
     file_list = list(files)
     frame = spark.range(0, len(file_list), 1, len(file_list))
+    batch_rows = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
 
     def read(batches):
         import pyarrow.parquet as _pq
@@ -94,9 +95,9 @@ def parquet_files(spark, files: list[str], batch_rows: int = 10_000) -> LineSour
 
         for b in batches:
             for path in (file_list[i] for i in b.column(0).to_pylist()):
-                for rb in _pq.ParquetFile(path).iter_batches(
-                    batch_size=batch_rows, columns=["doc_id", "tokens", "source"]
-                ):
+                pf = _pq.ParquetFile(path)
+                size = batch_rows if batch_rows > 0 else max(1, pf.metadata.num_rows)
+                for rb in pf.iter_batches(batch_size=size, columns=["doc_id", "tokens", "source"]):
                     toks = rb.column(1)
                     yield rb.column(0), rb.column(2), detokenize_list_array(toks), toks
 
@@ -219,11 +220,10 @@ def parse_sequence_files(
     files: list[str],
     fmt: str = FORMAT_COMMON,
     carry_tokens: bool = True,
-    batch_rows: int = 10_000,
 ) -> DataFrame:
     """Parquet files of the input shape -> parsed-event rows, the same
     rows as scan -> parse_sequences with whole files as task units."""
-    return parse(parquet_files(spark, files, batch_rows), fmt, carry_tokens)
+    return parse(parquet_files(spark, files), fmt, carry_tokens)
 
 
 def parquet_scan(df: DataFrame) -> tuple[list[str] | None, str | None]:

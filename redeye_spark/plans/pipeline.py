@@ -8,11 +8,9 @@ single mapInArrow parse inside whole-stage codegen:
 
   line source                           — one of (operators.parse_op):
     text files                            read, split and numbered by
-                                          each parse task (.log input)
+                                          each parse task (.log input,
+                                          streaming tail segments)
     parquet files                         read by each parse task
-    any other plan's line strings         (doc_id, source, line) rows,
-                                          e.g. a streaming tail batch or
-                                          numbered .gz lines
     any other plan's token column         round-robin repartition(n)
   mapInArrow(source+parse+classify)     — the only Python hop; reused
                                           workers skip re-reading
@@ -29,8 +27,8 @@ single mapInArrow parse inside whole-stage codegen:
 run_pipeline is the one commit function: a plain run is the case with
 no chunk id, and each chunk of plans.checkpoint.run_checkpointed is the
 same commit with its chunk id. It reports which line source the parse
-took (``parse_path``) and, when it was the general one, why
-(``fallback_reason``).
+took (``parse_path``) and why it read a text file whole or took the
+general one (``fallback_reason``).
 """
 
 from __future__ import annotations
@@ -53,8 +51,9 @@ from ..sources.io import ParquetIO, TableIO
 @dataclass
 class PipelineConfig:
     fmt: str = FORMAT_COMMON
-    # parse task count: byte ranges of text input (default: the session's
-    # parallelism), else an explicit round-robin repartition before the UDF
+    # parse task count: byte-range tasks of local text files (default: the
+    # session's parallelism), else an explicit round-robin repartition of
+    # a token column before the UDF
     num_partitions: int | None = None
     carry_tokens: bool = False  # True only when the invariant is checked inline
     bucket_granularity: str = "hour"
@@ -68,28 +67,26 @@ class PipelineConfig:
 def parse_input(
     spark: SparkSession, raw: DataFrame, cfg: PipelineConfig
 ) -> tuple[DataFrame, str, str | None]:
-    """raw sequences or line strings -> (parsed rows, parse path, why
-    the general path).
+    """raw sequences -> (parsed rows, parse path, why a text file was
+    read whole or why the general path).
 
     The parse path is the line source parse_op.parse runs over:
 
-      text_files     ``raw`` is the unmodified frame of
-                     tokenize_op.read_text_lines over local uncompressed
-                     files: the parse tasks read, number and parse
+      text_files     ``raw`` is the unmodified frame of a text reader
+                     (tokenize_op.read_text_lines, a streaming tail
+                     segment): the parse tasks read, number and parse
+                     the files themselves, local uncompressed files in
                      cfg.num_partitions (default: the session's
-                     parallelism) byte ranges of the files themselves;
+                     parallelism) byte ranges (sources.textfiles);
       parquet_files  ``raw`` is a bare local parquet scan of the input
                      shape and no repartition was asked for: each task
                      reads its own files with pyarrow instead of paying
                      Spark's per-element JVM-row->Arrow conversion of the
                      token column (measured ~2x the parse kernel);
-      general        anything else (streaming, filtered, in-memory,
-                     non-local, compressed): the ``line`` column of a
-                     (doc_id, source, line) ``raw`` or of the numbered
-                     lines behind a compressed or non-local
-                     read_text_lines frame, else ``raw``'s token column,
-                     from that frame's own plan, round-robin
-                     repartitioned to cfg.num_partitions when set.
+      general        anything else (streaming, filtered, in-memory):
+                     ``raw``'s token column from that frame's own plan,
+                     round-robin repartitioned to cfg.num_partitions
+                     when set.
 
     Output rows are identical whichever path is taken."""
     source, path, reason = line_source(spark, raw, cfg)
@@ -100,23 +97,18 @@ def line_source(
     spark: SparkSession, raw: DataFrame, cfg: PipelineConfig
 ) -> tuple[parse_op.LineSource, str, str | None]:
     """(the line source parse_input parses ``raw`` from, parse path,
-    why the general path); see parse_input."""
+    reason); see parse_input."""
     text = textfiles.tagged(raw)
-    if text is not None and text[0] is not None:
-        n = cfg.num_partitions or spark.sparkContext.defaultParallelism
-        return textfiles.line_source(spark, text[0], n), "text_files", None
     if text is not None:
-        raw, reason = textfiles.tagged_lines(raw), f"text input: {text[1]}"
-    elif "line" in raw.columns:
-        reason = "input is (doc_id, source, line) strings, not token arrays"
-    elif cfg.num_partitions is not None:
+        build, reason = text
+        return build(cfg.num_partitions or spark.sparkContext.defaultParallelism), "text_files", reason
+    if cfg.num_partitions is not None:
         reason = f"num_partitions={cfg.num_partitions} asks for a round-robin repartition"
     else:
         files, reason = parse_op.parquet_scan(raw)
         if files:
             return parse_op.parquet_files(spark, files), "parquet_files", None
-    read = parse_op.string_column if "line" in raw.columns else parse_op.token_column
-    return read(raw, cfg.num_partitions), "general", reason
+    return parse_op.token_column(raw, cfg.num_partitions), "general", reason
 
 
 def tag_parsed(parsed: DataFrame, cfg: PipelineConfig, source_dim: DataFrame | None = None) -> DataFrame:
@@ -153,7 +145,7 @@ class PipelineResult:
     sink_rows: dict[str, int]
     wall_sec: float
     parse_path: str = "general"  # text_files | parquet_files | general
-    fallback_reason: str | None = None  # why the parse took the general path
+    fallback_reason: str | None = None  # why a text file was read whole / the general path
     # [{part_id, rows, err}] per parse task that had rows; None when the
     # sink is not Parquet/ORC (no Observation metrics)
     partitions: list[dict] | None = None
@@ -167,7 +159,6 @@ def run_pipeline(
     source_dim: DataFrame | None = None,
     events_table: str = "events",
     agg_table: str = "agg_counts",
-    write_mode: str = "overwrite",
     chunk_id: int | None = None,
 ) -> PipelineResult:
     """Commit ``raw``: ONE pass parses and writes all sinks (the per-sink
@@ -180,7 +171,7 @@ def run_pipeline(
     both tables overwrite only that chunk's partitions (events by
     chunk_id and sink, counts by chunk_id), so rerunning a half-committed
     chunk replaces rather than duplicates. Without one, events are
-    partitioned by sink and both tables use ``write_mode``.
+    partitioned by sink and both tables are overwritten.
 
     Sinks other than Parquet/ORC directories (IcebergIO) take per-sink
     counts from a groupBy over the committed aggregate table, and report
@@ -189,10 +180,10 @@ def run_pipeline(
     t0 = time.monotonic()
 
     if chunk_id is None:
-        chunk_cols, in_chunk, events_by, agg_by = [], F.lit(True), ["sink"], None
+        chunk_cols, in_chunk, events_by, agg_by, mode = [], F.lit(True), ["sink"], None, "overwrite"
     else:
         chunk_cols, in_chunk = [F.lit(chunk_id).alias("chunk_id")], F.col("chunk_id") == chunk_id
-        events_by, agg_by, write_mode = ["chunk_id", "sink"], ["chunk_id"], "overwrite_partitions"
+        events_by, agg_by, mode = ["chunk_id", "sink"], ["chunk_id"], "overwrite_partitions"
     # No persist: the committed events table IS the reuse point. The parse
     # UDF runs exactly once (the sink write); the aggregate pass re-reads
     # the columnar sink with column pruning (5 narrow columns), which at
@@ -258,7 +249,7 @@ def run_pipeline(
         # ~2 s of a 15 s 2-core write job, stable across runs)
         "parquet.page.write-checksum.enabled": "false",
     }
-    io.write(tagged, events_table, mode=write_mode, partition_by=events_by,
+    io.write(tagged, events_table, mode=mode, partition_by=events_by,
              options=events_writer_options)
 
     # The aggregate pass reads 4 narrow columns of the committed events
@@ -267,7 +258,7 @@ def run_pipeline(
     # to the few partitions the partial counts need.
     events_back = io.read(spark, events_table, schema=tagged.schema).filter(in_chunk)
     counts = agg_op.salted_counts(events_back, cfg.bucket_granularity, cfg.salt_buckets)
-    io.write(counts.select("*", *chunk_cols), agg_table, mode=write_mode, partition_by=agg_by)
+    io.write(counts.select("*", *chunk_cols), agg_table, mode=mode, partition_by=agg_by)
 
     partitions = None
     if use_observe:

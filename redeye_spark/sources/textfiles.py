@@ -1,15 +1,20 @@
-"""Raw .log files read inside the Python worker.
+"""Raw .log files read inside the Python worker: the only code that
+splits and numbers text lines (batch text input, the reference's stdin
+mode, src/bin/redeye.rs:82, and the streaming tail). The numbered lines
+go as Arrow arrays straight to the line operator running in the same
+Python call (operators.parse_op: parse, lines or tokens). The driver
+only lists the files and gives each the cheapest reader that can read it:
 
-The batch text input (the reference's stdin mode, src/bin/redeye.rs:82)
-used to be a Spark text scan, a per-file numbering window and a
-tokenize hop before the parse. Here the driver only lists the files;
-each task reads its own byte range of them with plain file reads,
-splits and numbers the lines with numpy, and hands Arrow arrays
-straight to whatever runs in the same Python call (one of the line
-operators of operators.parse_op: parse, lines or tokens).
+  * local uncompressed: byte ranges, each read by its task;
+  * local .gz / .bz2: streamed through Python's gzip / bz2 by one task,
+    as one uncut piece of the byte-range plan;
+  * anything else (object stores, HDFS, lz4/snappy/zstd, tail
+    segments): a row of Spark's ``wholetext`` reader, which
+    decompresses JVM-side into one array, so under 2 GiB per file.
 
-Line semantics are Spark's text reader (Hadoop LineRecordReader with
-the default delimiter), so output rows are identical to the scan path:
+_read_piece splits and numbers every kind with the semantics of Spark's
+text reader (Hadoop LineRecordReader with the default delimiter), so
+rows equal a text scan numbered per file:
 
   * LF, CRLF and a lone CR each end a line; no empty line follows a
     final terminator; a last line without a terminator is a line;
@@ -20,24 +25,21 @@ the default delimiter), so output rows are identical to the scan path:
   * doc_id is ``<path>#<line>`` where <path> is the file URI Spark
     lists (URL-encoded) without its scheme, and source its basename.
 
-The task count is a caller's choice: the files are concatenated and cut
-into that many equal byte ranges, and a range owns the lines that START
-inside it. A range learns the number of its first line by counting
-terminators in the file bytes before it, so a single hot file spreads
-over every task without any exchange. That prefix count re-reads the
-file head once per range — O(tasks x bytes) of sequential reads at
-memchr speed, cheap next to the parse at the sizes a local session
-reads; split multi-GB files upstream for very wide clusters.
-
-Only local, uncompressed files take this path. Anything else (object
-stores, HDFS, .gz and other Hadoop codecs) is reported with a reason,
-and callers fall back to the Spark scan.
+The byte-range task count is a caller's choice: the local files are
+concatenated and cut into that many equal byte ranges, and a range owns
+the lines that START inside it. A range learns the number of its first
+line by counting terminators in the file bytes before it, so a single
+hot file spreads over every task without any exchange. That prefix count
+re-reads the file head once per range — O(tasks x bytes) of sequential
+reads at memchr speed, cheap next to the parse at the sizes a local
+session reads; split multi-GB files upstream for very wide clusters.
 """
 
 from __future__ import annotations
 
 import os
 import re
+import sys
 from dataclasses import dataclass
 from typing import Iterator
 from urllib.parse import unquote, urlparse
@@ -45,34 +47,33 @@ from urllib.parse import unquote, urlparse
 # scheme prefix Spark's file URIs carry ("file:", "file://", "hdfs://")
 FILE_SCHEME = r"^[a-z0-9+.-]+:(//)?"
 BLOCK_BYTES = 1 << 20  # bytes read per batch; bounds worker memory
+STREAMED = (".gz", ".bz2")  # codecs a worker decompresses itself
+_TO_END = sys.maxsize  # size and end of a piece read to its end
 _BOM = b"\xef\xbb\xbf"
 _LF, _CR, _SPACE = 10, 13, 32
 
 
 @dataclass(frozen=True)
 class TextFiles:
-    """Local text files in Spark's listing order."""
+    """Text files in Spark's listing order, sorted by reader."""
 
-    uris: tuple[str, ...]  # as Spark lists them, URL-encoded
-    paths: tuple[str, ...]  # local filesystem paths
-    sizes: tuple[int, ...]  # bytes, at listing time
+    uris: tuple[str, ...]  # local files as Spark lists them, URL-encoded
+    paths: tuple[str, ...]  # their local filesystem paths
+    sizes: tuple[int, ...]  # bytes on disk, at listing time
+    streamed: frozenset[int]  # indices of the .gz/.bz2 files
+    whole: tuple[str, ...]  # URIs of the files Spark's wholetext reader reads
 
 
-def file_lines(text):
-    """A Spark text reader's frame (batch or streaming) as (_file, line),
-    _file being the file URI without its scheme: the doc_id prefix of
-    operators.tokenize_op.number_text_lines."""
+def whole_files(text):
+    """A Spark ``wholetext`` reader's frame (batch or streaming) as
+    LineSource frame rows: (task None, file URI, file bytes)."""
     from pyspark.sql import functions as F
 
     return text.select(
-        F.regexp_replace(F.input_file_name(), FILE_SCHEME, "").alias("_file"),
-        F.col("value").alias("line"),
+        F.lit(None).cast("long").alias("task"),
+        F.input_file_name().alias("file"),
+        F.col("value").cast("binary").alias("text"),
     )
-
-
-def text_scan(spark, path):
-    """Spark's text scan as (_file, line): the fallback source."""
-    return file_lines(spark.read.text(path))
 
 
 def _codec_suffixes(spark) -> tuple[str, ...]:
@@ -85,50 +86,53 @@ def _codec_suffixes(spark) -> tuple[str, ...]:
     return tuple(str(new(c, conf).getDefaultExtension()) for c in classes)
 
 
-def list_text_files(spark, path) -> tuple[TextFiles | None, str | None]:
-    """The files Spark's text reader would read for ``path``, if every
-    one is a local uncompressed file; else (None, why not)."""
-    uris = list(spark.read.text(path).inputFiles())
+def list_text_files(spark, path) -> tuple[TextFiles, str | None]:
+    """The files Spark's text reader would read for ``path``, sorted by
+    reader, and why the first file read whole is (None if none is)."""
     suffixes = _codec_suffixes(spark)
-    paths, sizes = [], []
-    for uri in uris:
+    uris, paths, sizes, streamed, whole, reason = [], [], [], set(), [], None
+    for uri in spark.read.text(path).inputFiles():
         parsed = urlparse(uri)
+        codec = next((s for s in suffixes if uri.endswith(s)), None)
         if parsed.scheme != "file" or parsed.netloc:
-            return None, f"non-local file {uri}"
-        if uri.endswith(suffixes):
-            return None, f"compressed file {uri}"
-        local = unquote(parsed.path)
-        paths.append(local)
-        sizes.append(os.path.getsize(local))
-    return TextFiles(tuple(uris), tuple(paths), tuple(sizes)), None
+            why = "non-local file"
+        elif codec and codec not in STREAMED:
+            why = f"{codec} file"
+        else:
+            if codec:
+                streamed.add(len(paths))
+            local = unquote(parsed.path)
+            uris.append(uri)
+            paths.append(local)
+            sizes.append(os.path.getsize(local))
+            continue
+        whole.append(uri)
+        reason = reason or f"{why} {uri} is read whole by Spark's wholetext reader"
+    files = TextFiles(tuple(uris), tuple(paths), tuple(sizes), frozenset(streamed), tuple(whole))
+    return files, reason
 
 
-def tag(df, files: TextFiles | None, reason: str | None, lines=None):
-    """Mark ``df`` as the unmodified output of a text reader; a fallback
-    read (``files`` None) also records its numbered (doc_id, source,
-    line) frame. DataFrames are immutable and every transformation
-    returns a new object, so the mark never survives a filter,
-    projection or union."""
-    df._redeye_text_files = (files, reason, lines)
+def tag(df, build, reason: str | None):
+    """Mark ``df`` as the unmodified output of a text reader: ``build``
+    maps a byte-range task count to the reader's line source, and
+    ``reason`` says why a file is read whole (None if none is).
+    DataFrames are immutable and every transformation returns a new
+    object, so the mark never survives a filter, projection or union."""
+    df._redeye_text = (build, reason)
     return df
 
 
-def tagged(df) -> tuple[TextFiles | None, str | None] | None:
-    """(files, fallback reason) if ``df`` is a text reader's own output."""
-    mark = getattr(df, "_redeye_text_files", None)
-    return mark and mark[:2]
+def tagged(df):
+    """(line-source builder, reason) if ``df`` is a text reader's own
+    output, else None."""
+    return getattr(df, "_redeye_text", None)
 
 
-def tagged_lines(df):
-    """The numbered (doc_id, source, line) frame behind a fallback text
-    read, else None."""
-    mark = getattr(df, "_redeye_text_files", None)
-    return mark and mark[2]
-
-
-def byte_ranges(sizes, n: int) -> list[list[tuple[int, int, int]]]:
+def byte_ranges(sizes, n: int, uncut=frozenset()) -> list[list[tuple[int, int, int]]]:
     """Cut the concatenated files into ``n`` equal byte ranges; range k
-    is a list of (file index, start, end) pieces in file offsets."""
+    is a list of (file index, start, end) pieces in file offsets. A
+    file whose index is in ``uncut`` is one piece, in the range where it
+    starts."""
     total = sum(sizes)
     cuts = [k * total // n for k in range(n + 1)]
     out: list[list[tuple[int, int, int]]] = [[] for _ in range(n)]
@@ -137,12 +141,15 @@ def byte_ranges(sizes, n: int) -> list[list[tuple[int, int, int]]]:
         hi = lo + size
         while k < n and cuts[k + 1] <= lo:
             k += 1
-        j = k
-        while j < n and cuts[j] < hi:
-            a, b = max(cuts[j], lo) - lo, min(cuts[j + 1], hi) - lo
-            if b > a:
-                out[j].append((i, a, b))
-            j += 1
+        if i not in uncut:
+            j = k
+            while j < n and cuts[j] < hi:
+                a, b = max(cuts[j], lo) - lo, min(cuts[j + 1], hi) - lo
+                if b > a:
+                    out[j].append((i, a, b))
+                j += 1
+        elif size:
+            out[k].append((i, 0, size))
         lo = hi
     return out
 
@@ -222,51 +229,95 @@ def _read_piece(f, size: int, a: int, b: int, block: int):
         base += int(starts[-1])
 
 
-def read_ranges(files: TextFiles, pieces) -> Iterator[tuple]:
-    """Worker side: the lines of the given (file index, start, end)
-    pieces as Arrow arrays (doc_id, source, line), one tuple per block
-    read. Invalid UTF-8 fails the task naming the file and line, as the
-    scan path fails on it too."""
+def _arrow_lines(uri: str, blocks) -> Iterator[tuple]:
+    """(doc_id, source, line) Arrow arrays of one file's _read_piece
+    blocks. Invalid UTF-8 fails the task naming the file and line, as
+    Spark's text scan fails on it too."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    for i, a, b in pieces:
-        prefix = re.sub(FILE_SCHEME, "", files.uris[i], count=1)
-        m = re.search(r"([^/]+)$", prefix)
-        source = m.group(1) if m else ""
-        with open(files.paths[i], "rb") as f:
-            for numbers, data, offsets in _read_piece(f, files.sizes[i], a, b, BLOCK_BYTES):
-                lines = pa.StringArray.from_buffers(
-                    len(numbers), pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(data)
-                )
+    prefix = re.sub(FILE_SCHEME, "", uri, count=1)
+    m = re.search(r"([^/]+)$", prefix)
+    source = m.group(1) if m else ""
+    for numbers, data, offsets in blocks:
+        lines = pa.StringArray.from_buffers(
+            len(numbers), pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(data)
+        )
+        try:
+            lines.validate(full=True)
+        except pa.ArrowInvalid:
+            for no, line in zip(numbers, lines.cast(pa.binary()).to_pylist()):
                 try:
-                    lines.validate(full=True)
-                except pa.ArrowInvalid:
-                    for no, line in zip(numbers, lines.cast(pa.binary()).to_pylist()):
-                        try:
-                            line.decode("utf-8")
-                        except UnicodeDecodeError as e:
-                            raise ValueError(f"{prefix}#{no}: invalid UTF-8 ({e})") from None
-                    raise
-                doc_id = pc.binary_join_element_wise(
-                    pa.scalar(prefix + "#"), pa.array(numbers).cast(pa.string()), ""
-                )
-                yield doc_id, pa.repeat(pa.scalar(source), len(numbers)), lines
+                    line.decode("utf-8")
+                except UnicodeDecodeError as e:
+                    raise ValueError(f"{prefix}#{no}: invalid UTF-8 ({e})") from None
+            raise
+        doc_id = pc.binary_join_element_wise(
+            pa.scalar(prefix + "#"), pa.array(numbers).cast(pa.string()), ""
+        )
+        yield doc_id, pa.repeat(pa.scalar(source), len(numbers)), lines
 
 
-def line_source(spark, files: TextFiles, num_tasks: int):
-    """(frame, read) for a mapInArrow over ``num_tasks`` byte ranges of
-    ``files``: the frame is one row per task (a natively partitioned
-    range, so no exchange), and ``read`` maps a task's input batches to
-    its (doc_id, source, line, tokens=None) batches."""
-    ranges = byte_ranges(files.sizes, num_tasks)
-    frame = spark.range(0, num_tasks, 1, num_tasks)
+def read_ranges(files: TextFiles, pieces) -> Iterator[tuple]:
+    """Worker side: the lines of the given (file index, start, end)
+    pieces as _arrow_lines arrays; a streamed file is decompressed and
+    read to its end."""
+    import bz2
+    import gzip
+
+    for i, a, b in pieces:
+        path = files.paths[i]
+        if i in files.streamed:
+            opener, size, b = gzip.open if path.endswith(".gz") else bz2.open, _TO_END, _TO_END
+        else:
+            opener, size = open, files.sizes[i]
+        with opener(path, "rb") as f:
+            yield from _arrow_lines(files.uris[i], _read_piece(f, size, a, b, BLOCK_BYTES))
+
+
+def _source(frame, files: TextFiles | None, ranges):
+    """(frame, read): ``read`` maps input batches of (task, file, text)
+    rows to (doc_id, source, line, tokens=None) arrays. A row with a
+    task reads that task's byte ranges of ``files``; a row without one
+    is a whole file's bytes."""
 
     def read(batches):
+        import pyarrow as pa
+
         for batch in batches:
-            for k in batch.column(0).to_pylist():
-                for doc_id, source, lines in read_ranges(files, ranges[k]):
+            tasks, uris, texts = batch.columns
+            for j, k in enumerate(tasks.to_pylist()):
+                if k is not None:
+                    blocks = read_ranges(files, ranges[k])
+                else:
+                    text = texts[j].as_buffer()
+                    piece = _read_piece(pa.BufferReader(text), text.size, 0, text.size, BLOCK_BYTES)
+                    blocks = _arrow_lines(uris[j].as_py(), piece)
+                for doc_id, source, lines in blocks:
                     yield doc_id, source, lines, None
 
     return frame, read
+
+
+def line_source(spark, files: TextFiles, num_tasks: int):
+    """(frame, read) for a mapInArrow over ``num_tasks`` byte-range
+    tasks of the local files (a natively partitioned range, so no
+    exchange) followed by the wholetext scan of the files read whole."""
+    from pyspark.sql import functions as F
+
+    ranges = byte_ranges(files.sizes, num_tasks, files.streamed)
+    frame = spark.range(0, num_tasks, 1, num_tasks).select(
+        F.col("id").alias("task"),
+        F.lit(None).cast("string").alias("file"),
+        F.lit(None).cast("binary").alias("text"),
+    )
+    if files.whole:
+        frame = frame.union(whole_files(spark.read.text(list(files.whole), wholetext=True)))
+    return _source(frame, files, ranges)
+
+
+def whole_file_source(frame):
+    """(frame, read) over ``whole_files`` rows: each task reads the
+    files its rows hold."""
+    return _source(frame, None, None)

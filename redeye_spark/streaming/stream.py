@@ -86,11 +86,14 @@ def start_text_tail_stream(
     A Spark file stream treats files as immutable, so "tail" becomes
     watching a spool DIRECTORY for appended log segments — exactly how
     log shippers (logrotate, fluentd, filebeat) hand files to a
-    cluster; each drop of lines is one micro-batch. Each batch is
-    numbered (number_text_lines: doc_id = file#line_no) and committed
-    by run_pipeline with chunk_id = batch id into ``out_dir``'s
-    ``events`` and ``agg_counts`` tables; the line strings go straight
-    into the one parse hop (no tokenize step). The JSON-lines mirror of
+    cluster; each drop of lines is one micro-batch. Spark's wholetext
+    reader hands each segment over as one row, and the parse task that
+    gets the row splits and numbers its lines (sources.textfiles:
+    doc_id = file#line_no) in the one parse hop, with no window or
+    exchange before it; each batch is committed by run_pipeline with
+    chunk_id = batch id into ``out_dir``'s ``events`` and
+    ``agg_counts`` tables. A segment must be under 2 GiB, the size
+    Hadoop reads into one array. The JSON-lines mirror of
     the committed ok rows (the reference's stdout,
     src/bin/redeye.rs:86-87) goes to ``events_json/chunk_id=<batch
     id>``, built from the committed events, so each line is parsed once.
@@ -100,15 +103,17 @@ def start_text_tail_stream(
     import os
 
     from ..operators.parse_op import to_logstash_json
-    from ..operators.tokenize_op import number_text_lines
 
     cfg = cfg or PipelineConfig()
     io = ParquetIO(out_dir)
-    raw_lines = textfiles.file_lines(spark.readStream.format("text").load(watch_dir))
+    segments = textfiles.whole_files(spark.readStream.text(watch_dir, wholetext=True))
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
         session = batch_df.sparkSession
-        if not run_pipeline(session, number_text_lines(batch_df), io, cfg, chunk_id=batch_id).rows_ok:
+        # a micro-batch lists no input files, so every segment is read whole
+        batch = textfiles.tag(batch_df, lambda _: textfiles.whole_file_source(batch_df),
+                              "a tail segment is read whole by Spark's wholetext reader")
+        if not run_pipeline(session, batch, io, cfg, chunk_id=batch_id).rows_ok:
             return  # no JSON lines; an events table with no files has no schema to read
         events = io.read(session, "events").filter(F.col("chunk_id") == batch_id)
         (
@@ -120,7 +125,7 @@ def start_text_tail_stream(
             .text(os.path.join(out_dir, "events_json"))
         )
 
-    return _start(raw_lines.writeStream.foreachBatch(commit), checkpoint_dir, trigger_available_now)
+    return _start(segments.writeStream.foreachBatch(commit), checkpoint_dir, trigger_available_now)
 
 
 def start_windowed_counts(

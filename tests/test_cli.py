@@ -39,12 +39,26 @@ def test_format_flags_mutually_exclusive():
 
 
 def test_arrow_batch_rows_applies_to_session(spark, raw_dir, capsys):
+    """The flag sets the session's Arrow batch size, and the parquet_files
+    line source reads batches of that size: its read, run on the driver
+    over one 2000-row file, yields no batch over 1234 rows."""
+    import glob
+
+    import pyarrow as pa
+
+    from redeye_spark.operators import parse_op
+
     before = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     try:
         run_cli(raw_dir, "--arrow-batch-rows", "1234")
         assert spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch") == "1234"
         stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
         assert stats["rows_in"] == 2000
+        one = raw_dir + "/one_file"
+        spark.read.parquet(raw_dir + "/raw").coalesce(1).write.mode("overwrite").parquet(one)
+        _, read = parse_op.parquet_files(spark, glob.glob(one + "/*.parquet"))
+        sizes = [len(lines) for _, _, lines, _ in read([pa.record_batch([pa.array([0])], ["id"])])]
+        assert sum(sizes) == 2000 and max(sizes) == 1234, sizes
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", before)
 
@@ -153,8 +167,8 @@ class TestTextInput:
 
     def test_cli_grok_text_input_counts_every_line(self, spark, tmp_path, capsys):
         """--grok --text-input over plain .log files (read by the parse
-        tasks) and over a directory that also holds a .log.gz (Spark's
-        text scan): every non-blank line is counted, once."""
+        tasks) and over a directory that also holds a .log.gz (streamed
+        by one of them): every non-blank line is counted, once."""
         import gzip
 
         import redeye_spark.job as job_mod

@@ -347,10 +347,11 @@ def test_text_tail_replayed_segment_overwrites_its_rows(spark, tmp_path_factory)
 
 def test_text_tail_parses_each_line_once(spark, tmp_path_factory):
     """Across the SQL executions of a one-segment tail run, exactly one
-    plan holds a Python map: one MapInArrow (the parse, fed the line
-    strings directly) and no MapInPandas, and its kernel output is the
-    segment's 31 lines — the JSON mirror and the aggregate read the
-    committed events instead of re-running the parse."""
+    plan holds a Python map: one MapInArrow (the parse, which reads the
+    segment itself) and no MapInPandas, with no Window or Exchange in
+    that plan, and its kernel output is the segment's 31 lines — the
+    JSON mirror and the aggregate read the committed events instead of
+    re-running the parse."""
     base = str(tmp_path_factory.mktemp("tail_once"))
     watch = f"{base}/spool"
     _tail_segment(watch)
@@ -377,6 +378,9 @@ def test_text_tail_parses_each_line_once(spark, tmp_path_factory):
     assert len(python_maps) == 1, [e for e, _ in python_maps]
     eid, maps = python_maps[0]
     assert [n.name() for n in maps] == ["MapInArrow"]
+    nodes = store.planGraph(eid).allNodes()
+    names = [nodes.apply(i).name() for i in range(nodes.size())]
+    assert not [n for n in names if n == "Window" or "Exchange" in n], names
     metrics = store.executionMetrics(eid)
     out_rows = [
         metrics.get(m.accumulatorId()).get()

@@ -1,9 +1,11 @@
 """The worker-side text reader (sources.textfiles) against Spark's text
 scan: read_text_lines / text_lines_df and the text_files parse path must
 give the same rows as the scan -> numbering window -> tokenize ->
-parse_sequences path, and anything the reader does not take must fall
-back to that path with a reason."""
+parse_sequences path (tests/text_reference.py) for every kind of file —
+local plain, local .gz/.bz2, and files Spark's wholetext reader reads —
+in one Python hop with no exchange before it."""
 
+import bz2
 import gzip
 import io
 import random
@@ -11,14 +13,10 @@ import re
 
 import pandas as pd
 import pytest
+from text_reference import number_text_lines, text_scan
 
 from redeye_spark.operators import parse_op
-from redeye_spark.operators.tokenize_op import (
-    number_text_lines,
-    read_text_lines,
-    text_lines_df,
-    tokenize_lines,
-)
+from redeye_spark.operators.tokenize_op import read_text_lines, text_lines_df, tokenize_lines
 from redeye_spark.plans.pipeline import PipelineConfig, parse_input, run_pipeline
 from redeye_spark.sources import textfiles
 from redeye_spark.sources.io import ParquetIO
@@ -36,7 +34,7 @@ def _write(path, data: bytes):
 def _scan_rows(spark, path):
     """Today's general path: Spark's text scan, the numbering window,
     the tokenize hop, then parse_sequences."""
-    tokens = tokenize_lines(number_text_lines(textfiles.text_scan(spark, path)))
+    tokens = tokenize_lines(number_text_lines(text_scan(spark, path)))
     return parse_op.parse_sequences(tokens, carry_tokens=True)
 
 
@@ -47,20 +45,23 @@ def _frame(df):
     return pdf.sort_values("doc_id").reset_index(drop=True)
 
 
-def assert_same_rows(spark, path, num_tasks):
+def assert_same_rows(spark, path, num_tasks, reason=None):
     """Whole parsed rows (doc_id, source, tokens, message, every field)
-    through the text_files parse path equal the scan path's; so do the
-    tokenized and line frames of the two readers."""
+    through the text_files parse path equal the scan path's, from a plan
+    with one MapInArrow and no Window or Exchange; so do the tokenized
+    and line frames of the two readers."""
     expected = _frame(_scan_rows(spark, path))
     raw = read_text_lines(spark, path)
-    parsed, parse_path, reason = parse_input(
+    parsed, parse_path, why = parse_input(
         spark, raw, PipelineConfig(num_partitions=num_tasks, carry_tokens=True)
     )
-    assert (parse_path, reason) == ("text_files", None)
+    assert (parse_path, why) == ("text_files", reason)
     pd.testing.assert_frame_equal(_frame(parsed), expected)
-    old_tokens = tokenize_lines(number_text_lines(textfiles.text_scan(spark, path)))
+    plan = parsed._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1 and "Window" not in plan and "Exchange" not in plan, plan
+    old_tokens = tokenize_lines(number_text_lines(text_scan(spark, path)))
     pd.testing.assert_frame_equal(_frame(raw), _frame(old_tokens))
-    old_lines = number_text_lines(textfiles.text_scan(spark, path))
+    old_lines = number_text_lines(text_scan(spark, path))
     pd.testing.assert_frame_equal(
         _frame(text_lines_df(spark, path, num_tasks)), _frame(old_lines), check_dtype=False
     )
@@ -118,37 +119,42 @@ class TestRowsIdenticalToScanPath:
         assert f"{tmp_path}/host%20B/access.log#2" in set(rows["doc_id"])
 
     def test_invalid_utf8_fails_on_both_paths(self, spark, tmp_path):
-        _write(tmp_path / "bad.log", LINE + b"\n\xff\xfe bad \xc3\n" + LINE2 + b"\n")
-        with pytest.raises(Exception):
-            _scan_rows(spark, str(tmp_path)).collect()
-        raw = read_text_lines(spark, str(tmp_path))
-        parsed, parse_path, _ = parse_input(spark, raw, PipelineConfig(num_partitions=2))
-        assert parse_path == "text_files"
-        with pytest.raises(Exception, match=re.escape(f"{tmp_path}/bad.log#2: invalid UTF-8")):
-            parsed.collect()
+        bad = LINE + b"\n\xff\xfe bad \xc3\n" + LINE2 + b"\n"
+        for name, data in (("bad.log", bad), ("bad.log.gz", gzip.compress(bad))):
+            path = _write(tmp_path / name / name, data)
+            with pytest.raises(Exception):
+                _scan_rows(spark, str(path.parent)).collect()
+            raw = read_text_lines(spark, str(path.parent))
+            parsed, parse_path, _ = parse_input(spark, raw, PipelineConfig(num_partitions=2))
+            assert parse_path == "text_files"
+            with pytest.raises(Exception, match=re.escape(f"{path}#2: invalid UTF-8")):
+                parsed.collect()
 
-    def test_gz_file_takes_the_fallback(self, spark, tmp_path):
-        _write(tmp_path / "plain.log", LINE + b"\n")
-        _write(tmp_path / "old.log.gz", gzip.compress(LINE2 + b"\n\n" + LINE + b"\n"))
-        raw = read_text_lines(spark, str(tmp_path))
-        files, reason = textfiles.tagged(raw)
-        assert files is None and "compressed file" in reason and "old.log.gz" in reason
-        parsed, parse_path, why = parse_input(spark, raw, PipelineConfig(num_partitions=2, carry_tokens=True))
-        assert parse_path == "general" and why == f"text input: {reason}"
-        got = _frame(parsed)
-        pd.testing.assert_frame_equal(got, _frame(_scan_rows(spark, str(tmp_path))))
-        assert set(got["doc_id"]) == {f"{tmp_path}/plain.log#1", f"{tmp_path}/old.log.gz#1", f"{tmp_path}/old.log.gz#3"}
+    def test_compressed_and_mixed_files_match_the_window(self, spark, tmp_path):
+        """A local .gz (multi-member) or .bz2 file is streamed by one
+        task and a Spark-written .lz4 file is read whole, all in the one
+        parse hop, with the window reference's rows."""
+        mixed = tmp_path / "mixed"
+        body = (b"\xef\xbb\xbf" + LINE + b"\r\n\r\n   \n\t\n" + LINE2 + b"\r" + LINE
+                + b"\n not a log line \r\n")
+        _write(mixed / "plain.log", body)
+        _write(mixed / "old.log.gz", gzip.compress(body) + gzip.compress(LINE2 + b"\n\n" + LINE))
+        _write(mixed / "older.log.bz2", bz2.compress(body + LINE2))
+        for n in (1, 3):
+            rows = assert_same_rows(spark, str(mixed), n)
+        ids = set(rows["doc_id"])
+        # the second member numbers on from the first member's 7 lines
+        assert {f"{mixed}/old.log.gz#1", f"{mixed}/old.log.gz#8", f"{mixed}/old.log.gz#10"} <= ids
+        assert f"{mixed}/old.log.gz#9" not in ids and f"{mixed}/older.log.bz2#8" in ids
 
-
-    def test_gz_fallback_parses_in_one_hop(self, spark, tmp_path):
-        """A compressed input reaches the parse as its numbered line
-        strings: the plan holds one MapInArrow and no MapInPandas."""
-        _write(tmp_path / "old.log.gz", gzip.compress(LINE + b"\n" + LINE2 + b"\n"))
-        raw = read_text_lines(spark, str(tmp_path))
-        parsed = parse_input(spark, raw, PipelineConfig(num_partitions=2))[0]
-        plan = parsed._jdf.queryExecution().optimizedPlan().toString()
-        assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan, plan
-        assert parsed.count() == 2
+        lz4 = str(tmp_path / "lz4")
+        lines = [LINE.decode(), "", "  ", LINE2.decode(), "junk"] * 50
+        spark.createDataFrame([(x,) for x in lines], "value string").coalesce(2) \
+            .write.option("compression", "lz4").text(lz4)
+        files, reason = textfiles.list_text_files(spark, lz4)
+        assert not files.paths and files.whole and reason.startswith(".lz4 file ") and "read whole" in reason
+        rows = assert_same_rows(spark, lz4, 2, reason)
+        assert len(rows) == 150
 
 
 class TestParsePathReport:
@@ -165,13 +171,6 @@ class TestParsePathReport:
         res = run_pipeline(spark, raw.filter("n_tok > 20"), ParquetIO(str(tmp_path / "c")), PipelineConfig())
         assert res.parse_path == "general" and res.fallback_reason == "plan root is Filter, not a file scan"
         assert (res.rows_in, res.rows_err) == (2, 0)
-
-    def test_line_strings_take_the_string_column(self, spark, tmp_path):
-        _write(tmp_path / "web.log", LINE + b"\nnot a log line\n" + LINE2 + b"\n")
-        lines = number_text_lines(textfiles.text_scan(spark, str(tmp_path)))
-        parsed, parse_path, why = parse_input(spark, lines, PipelineConfig(carry_tokens=True))
-        assert (parse_path, why) == ("general", "input is (doc_id, source, line) strings, not token arrays")
-        pd.testing.assert_frame_equal(_frame(parsed), _frame(_scan_rows(spark, str(tmp_path))))
 
     def test_parquet_scan_reasons(self, spark, tmp_path):
         from redeye_spark.schema import RAW_SEQUENCES
@@ -223,10 +222,13 @@ def test_piece_reader_matches_line_semantics_for_any_cut_and_block():
 def test_byte_ranges_cover_every_byte_once():
     sizes = [0, 7, 1, 0, 30, 2]
     for n in (1, 2, 3, 8, 50):
-        ranges = textfiles.byte_ranges(sizes, n)
-        assert len(ranges) == n
-        covered = sorted((i, a, b) for r in ranges for i, a, b in r)
-        for i, size in enumerate(sizes):
-            spans = [(a, b) for j, a, b in covered if j == i]
-            assert sum(b - a for a, b in spans) == size
-            assert all(b > a for a, b in spans)
+        for uncut in (frozenset(), frozenset({3, 4})):  # a streamed file is one piece
+            ranges = textfiles.byte_ranges(sizes, n, uncut)
+            assert len(ranges) == n
+            covered = sorted((i, a, b) for r in ranges for i, a, b in r)
+            for i, size in enumerate(sizes):
+                spans = [(a, b) for j, a, b in covered if j == i]
+                assert sum(b - a for a, b in spans) == size
+                assert all(b > a for a, b in spans)
+            if uncut:  # in the range where its first byte, byte 8, falls
+                assert (4, 0, 30) in ranges[min(k for k in range(n) if (k + 1) * 40 // n > 8)]
