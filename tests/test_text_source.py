@@ -156,6 +156,32 @@ class TestRowsIdenticalToScanPath:
         rows = assert_same_rows(spark, lz4, 2, reason)
         assert len(rows) == 150
 
+    def test_gz_file_takes_the_fallback(self, spark, tmp_path):
+        """A .gz file cannot be cut into byte ranges: it falls back to one
+        piece that one task streams through gzip, still on the text_files
+        path and with the scan path's rows."""
+        _write(tmp_path / "plain.log", LINE + b"\n")
+        _write(tmp_path / "old.log.gz", gzip.compress(LINE2 + b"\n\n" + LINE + b"\n"))
+        files, reason = textfiles.list_text_files(spark, str(tmp_path))
+        assert reason is None and not files.whole
+        gz = next(i for i, p in enumerate(files.paths) if p.endswith("old.log.gz"))
+        assert files.streamed == {gz}
+        pieces = [p for r in textfiles.byte_ranges(files.sizes, 4, files.streamed) for p in r if p[0] == gz]
+        assert pieces == [(gz, 0, files.sizes[gz])]
+        rows = assert_same_rows(spark, str(tmp_path), 2)
+        assert set(rows["doc_id"]) == {f"{tmp_path}/plain.log#1", f"{tmp_path}/old.log.gz#1", f"{tmp_path}/old.log.gz#3"}
+
+    def test_gz_fallback_parses_in_one_hop(self, spark, tmp_path):
+        """A compressed input reaches the parse straight from the reader:
+        the plan holds one MapInArrow and no MapInPandas."""
+        _write(tmp_path / "old.log.gz", gzip.compress(LINE + b"\n" + LINE2 + b"\n"))
+        raw = read_text_lines(spark, str(tmp_path))
+        parsed, parse_path, _ = parse_input(spark, raw, PipelineConfig(num_partitions=2))
+        assert parse_path == "text_files"
+        plan = parsed._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan, plan
+        assert parsed.count() == 2
+
 
 class TestParsePathReport:
     def test_text_files_for_read_text_lines_and_general_when_filtered(self, spark, tmp_path):
