@@ -101,7 +101,8 @@ def main(argv: list[str] | None = None) -> int:
         # text mode: local uncompressed files are cut into this many byte
         # ranges, each read by its parse task; a local .gz/.bz2 file is
         # one task's piece, and other files (object stores, other codecs)
-        # add one row per file to the same parse stage
+        # add one row per file to the same parse stage: each of these is
+        # parsed by one task
         num_partitions=args.parallelism
         or (spark.sparkContext.defaultParallelism if args.text_input else None),
         bucket_granularity=args.bucket,

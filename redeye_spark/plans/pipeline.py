@@ -51,9 +51,10 @@ from ..sources.io import ParquetIO, TableIO
 @dataclass
 class PipelineConfig:
     fmt: str = FORMAT_COMMON
-    # parse task count: byte-range tasks of local text files (default: the
-    # session's parallelism), else an explicit round-robin repartition of
-    # a token column before the UDF
+    # parse task count: byte-range tasks of local uncompressed text files
+    # (default: the session's parallelism; a .gz/.bz2 file or a file read
+    # whole is parsed by one task whatever this is), else an explicit
+    # round-robin repartition of a token column before the UDF
     num_partitions: int | None = None
     carry_tokens: bool = False  # True only when the invariant is checked inline
     bucket_granularity: str = "hour"

@@ -11,6 +11,11 @@ only lists the files and gives each the cheapest reader that can read it:
   * anything else (object stores, HDFS, lz4/snappy/zstd, tail
     segments): a row of Spark's ``wholetext`` reader, which
     decompresses JVM-side into one array, so under 2 GiB per file.
+    These rows reach the worker in Arrow batches with 32-bit offsets,
+    and Spark closes a batch once it passes
+    spark.sql.execution.arrow.maxBytesPerBatch (64 MiB by default): the
+    files of one batch, at most that much plus one file, must together
+    stay under 2 GiB, and a task holds one batch in memory.
 
 _read_piece splits and numbers every kind with the semantics of Spark's
 text reader (Hadoop LineRecordReader with the default delimiter), so
@@ -25,14 +30,16 @@ rows equal a text scan numbered per file:
   * doc_id is ``<path>#<line>`` where <path> is the file URI Spark
     lists (URL-encoded) without its scheme, and source its basename.
 
-The byte-range task count is a caller's choice: the local files are
-concatenated and cut into that many equal byte ranges, and a range owns
-the lines that START inside it. A range learns the number of its first
-line by counting terminators in the file bytes before it, so a single
-hot file spreads over every task without any exchange. That prefix count
-re-reads the file head once per range — O(tasks x bytes) of sequential
-reads at memchr speed, cheap next to the parse at the sizes a local
-session reads; split multi-GB files upstream for very wide clusters.
+The byte-range task count is a caller's choice: the local uncompressed
+files are concatenated and cut into that many equal byte ranges, and a
+range owns the lines that START inside it. A range learns the number of
+its first line by counting terminators in the file bytes before it, so
+a single hot file spreads over every task without any exchange. That
+prefix count re-reads the file head once per range — O(tasks x bytes)
+of sequential reads at memchr speed, cheap next to the parse at the
+sizes a local session reads; split multi-GB files upstream for very
+wide clusters. A streamed or whole file is split and parsed by the one
+task that reads it, whatever the task count.
 """
 
 from __future__ import annotations
@@ -276,7 +283,7 @@ def read_ranges(files: TextFiles, pieces) -> Iterator[tuple]:
             yield from _arrow_lines(files.uris[i], _read_piece(f, size, a, b, BLOCK_BYTES))
 
 
-def _source(frame, files: TextFiles | None, ranges):
+def frame_source(frame, files: TextFiles | None = None, ranges=None):
     """(frame, read): ``read`` maps input batches of (task, file, text)
     rows to (doc_id, source, line, tokens=None) arrays. A row with a
     task reads that task's byte ranges of ``files``; a row without one
@@ -313,11 +320,9 @@ def line_source(spark, files: TextFiles, num_tasks: int):
         F.lit(None).cast("binary").alias("text"),
     )
     if files.whole:
-        frame = frame.union(whole_files(spark.read.text(list(files.whole), wholetext=True)))
-    return _source(frame, files, ranges)
-
-
-def whole_file_source(frame):
-    """(frame, read) over ``whole_files`` rows: each task reads the
-    files its rows hold."""
-    return _source(frame, None, None)
+        # Hadoop's Path takes an unescaped string and reads glob syntax,
+        # so hand it the decoded path with its glob characters escaped;
+        # input_file_name() then gives back the listed URI
+        paths = [re.sub(r"([\\{}\[\]*?])", r"\\\1", unquote(u)) for u in files.whole]
+        frame = frame.union(whole_files(spark.read.text(paths, wholetext=True)))
+    return frame_source(frame, files, ranges)

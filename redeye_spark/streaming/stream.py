@@ -93,8 +93,10 @@ def start_text_tail_stream(
     exchange before it; each batch is committed by run_pipeline with
     chunk_id = batch id into ``out_dir``'s ``events`` and
     ``agg_counts`` tables. A segment must be under 2 GiB, the size
-    Hadoop reads into one array. The JSON-lines mirror of
-    the committed ok rows (the reference's stdout,
+    Hadoop reads into one array, and so must the segments of one Arrow
+    batch together (Spark closes a batch once it passes
+    spark.sql.execution.arrow.maxBytesPerBatch, 64 MiB by default). The
+    JSON-lines mirror of the committed ok rows (the reference's stdout,
     src/bin/redeye.rs:86-87) goes to ``events_json/chunk_id=<batch
     id>``, built from the committed events, so each line is parsed once.
     The streaming checkpoint makes a restart resume after the last
@@ -111,7 +113,7 @@ def start_text_tail_stream(
     def commit(batch_df: DataFrame, batch_id: int) -> None:
         session = batch_df.sparkSession
         # a micro-batch lists no input files, so every segment is read whole
-        batch = textfiles.tag(batch_df, lambda _: textfiles.whole_file_source(batch_df),
+        batch = textfiles.tag(batch_df, lambda _: textfiles.frame_source(batch_df),
                               "a tail segment is read whole by Spark's wholetext reader")
         if not run_pipeline(session, batch, io, cfg, chunk_id=batch_id).rows_ok:
             return  # no JSON lines; an events table with no files has no schema to read

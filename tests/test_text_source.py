@@ -13,6 +13,7 @@ import re
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 from text_reference import number_text_lines, text_scan
 
 from redeye_spark.operators import parse_op
@@ -147,14 +148,46 @@ class TestRowsIdenticalToScanPath:
         assert {f"{mixed}/old.log.gz#1", f"{mixed}/old.log.gz#8", f"{mixed}/old.log.gz#10"} <= ids
         assert f"{mixed}/old.log.gz#9" not in ids and f"{mixed}/older.log.bz2#8" in ids
 
-        lz4 = str(tmp_path / "lz4")
+        # the second directory's name needs URL-encoding and glob escapes,
+        # and its 12 files are packed several to a read partition
         lines = [LINE.decode(), "", "  ", LINE2.decode(), "junk"] * 50
-        spark.createDataFrame([(x,) for x in lines], "value string").coalesce(2) \
-            .write.option("compression", "lz4").text(lz4)
-        files, reason = textfiles.list_text_files(spark, lz4)
-        assert not files.paths and files.whole and reason.startswith(".lz4 file ") and "read whole" in reason
-        rows = assert_same_rows(spark, lz4, 2, reason)
-        assert len(rows) == 150
+        for name, n_files in (("lz4", 2), ("lz4 [1] {x} 100%", 12)):
+            lz4 = tmp_path / name
+            spark.createDataFrame([(x,) for x in lines], "value string").repartition(n_files) \
+                .write.option("compression", "lz4").text(str(lz4))
+            path = re.sub(r"([\\{}\[\]*?])", r"\\\1", str(lz4))
+            files, reason = textfiles.list_text_files(spark, path)
+            assert not files.paths and len(files.whole) == n_files
+            assert reason.startswith(".lz4 file ") and "read whole" in reason
+            rows = assert_same_rows(spark, path, 2, reason)
+            assert len(rows) == 150
+        assert f"{tmp_path}/lz4%20%5B1%5D%20%7Bx%7D%20100%25/part-" in rows["doc_id"][0]
+        per_task = spark.read.text(path, wholetext=True).groupBy(F.spark_partition_id()).count().collect()
+        assert max(n for _, n in per_task) > 1
+
+    def test_arrow_batches_of_whole_files_are_cut_by_bytes(self, spark, tmp_path):
+        """Spark closes an Arrow batch of whole-file rows once it passes
+        maxBytesPerBatch, so a batch holds at most that plus one file;
+        below it, one batch holds several files of a read partition."""
+        for i in range(12):
+            _write(tmp_path / f"f{i}.log", b"x" * 4000)
+        frame = spark.read.text(str(tmp_path), wholetext=True).select(F.col("value").cast("binary"))
+
+        def rows_per_batch(batches):
+            import pyarrow as pa
+
+            for batch in batches:
+                yield pa.RecordBatch.from_pydict({"n": [batch.num_rows]})
+
+        key = "spark.sql.execution.arrow.maxBytesPerBatch"
+        old = spark.conf.get(key)
+        try:
+            for limit, most in (("6000b", 2), (old, 12)):
+                spark.conf.set(key, limit)
+                counts = [r.n for r in frame.mapInArrow(rows_per_batch, "n long").collect()]
+                assert sum(counts) == 12 and 1 < max(counts) <= most, counts
+        finally:
+            spark.conf.set(key, old)
 
     def test_gz_file_takes_the_fallback(self, spark, tmp_path):
         """A .gz file cannot be cut into byte ranges: it falls back to one
