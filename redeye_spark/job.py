@@ -122,7 +122,8 @@ def main(argv: list[str] | None = None) -> int:
             lines = text_lines_df(spark, args.input, cfg.num_partitions)
         else:
             # the parse's line source: parquet_files for a bare local
-            # scan, --parallelism repartitions the tokens before the hop
+            # scan (small files packed into tasks by Spark's split rule),
+            # --parallelism repartitions the tokens before the hop
             from redeye_spark.operators import parse_op
             from redeye_spark.plans.pipeline import line_source
 

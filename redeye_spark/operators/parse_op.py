@@ -10,7 +10,8 @@ as one vectorized distributed operator), ``lines`` and ``tokens``.
 Sources:
 
   token_column    (doc_id, tokens, n_tok, source) rows from any plan
-  parquet_files   the same shape read by the worker from local parquet
+  parquet_files   the same shape read by the worker from local parquet,
+                  small files packed into tasks by Spark's split rule
   string_column   (doc_id, source, line) rows from any plan
   text files      raw .log files read, split and numbered by the worker
                   (sources.textfiles)
@@ -23,13 +24,16 @@ reused worker more CPU per task than the parse itself.
 
 from __future__ import annotations
 
+import os
 from typing import Callable, Iterator
+from urllib.parse import unquote
 
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from ..functions.logparse import FORMAT_COMMON
 from ..functions.worker import steady_import_caches
 from ..schema import LINES, RAW_SEQUENCES, parsed_schema
+from ..session import parse_memory
 
 # (frame the mapInArrow runs over, worker-side function from its input
 # batches to (doc_id, source, line, tokens-or-None) Arrow arrays)
@@ -70,22 +74,53 @@ def string_column(df: DataFrame) -> LineSource:
     return df, read
 
 
+def file_tasks(spark, files: list[str]) -> list[list[str]]:
+    """Local ``files`` packed into parse tasks by Spark's own file-split
+    rule (FilePartition.maxSplitBytes / getFilePartitions), read from the
+    session's spark.sql.files.* confs: a task holds at most
+
+      cap = min(maxPartitionBytes,
+                max(openCostInBytes, sum(size + openCost) / minPartitionNum))
+
+    bytes, minPartitionNum defaulting to the default parallelism; files
+    are taken largest first and a task is closed before a file that would
+    push it past the cap, so a file bigger than the cap is a task of its
+    own. Sizes come from the driver's listing."""
+    conf = spark.conf
+    max_bytes = parse_memory(conf.get("spark.sql.files.maxPartitionBytes"))
+    open_cost = parse_memory(conf.get("spark.sql.files.openCostInBytes"))
+    min_parts = int(conf.get("spark.sql.files.minPartitionNum", None) or spark.sparkContext.defaultParallelism)
+    sizes = {f: os.path.getsize(f) for f in files}
+    cap = min(max_bytes, max(open_cost, sum(s + open_cost for s in sizes.values()) // min_parts))
+    tasks, size = [[]], 0
+    for f in sorted(files, key=sizes.get, reverse=True):
+        if tasks[-1] and size + sizes[f] > cap:
+            tasks.append([])
+            size = 0
+        tasks[-1].append(f)
+        size += sizes[f] + open_cost
+    return tasks
+
+
 def parquet_files(spark, files: list[str]) -> LineSource:
     """Columnar-source lines (guide §8 'read your own slice'): each task
     reads whole parquet files of the input shape with pyarrow, so the
     token arrays go parquet -> Arrow -> parse with ZERO JVM row
     materialization (measured: the JVM->Python round trip of the token
-    column costs ~2x the parse kernel itself). Batches hold the session's
+    column costs ~2x the parse kernel itself). The files are packed into
+    tasks as Spark's own scan would pack them (file_tasks), so a table of
+    many small files opens, writes and footers a file per sink per task,
+    not per input file. Batches hold the session's
     spark.sql.execution.arrow.maxRecordsPerBatch rows, as Spark's own
     Arrow batches do (no limit when it is not positive)."""
-    # one file index per partition via a natively-partitioned range —
+    # one task index per partition via a natively-partitioned range —
     # no exchange at all (a repartition here cost a 2-stage AQE job per
     # action; a python-RDD parallelize cost a pickled-RDD python round
-    # trip per task — both measured and removed). The path list rides
+    # trip per task — both measured and removed). The file groups ride
     # the task binary (broadcast once per stage). Deterministic under
-    # retry: each task re-reads the same file.
-    file_list = list(files)
-    frame = spark.range(0, len(file_list), 1, len(file_list))
+    # retry: each task re-reads the same files.
+    tasks = file_tasks(spark, files)
+    frame = spark.range(0, len(tasks), 1, len(tasks))
     batch_rows = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
 
     def read(batches):
@@ -94,7 +129,7 @@ def parquet_files(spark, files: list[str]) -> LineSource:
         from ..functions.tokens import detokenize_list_array
 
         for b in batches:
-            for path in (file_list[i] for i in b.column(0).to_pylist()):
+            for path in (p for i in b.column(0).to_pylist() for p in tasks[i]):
                 pf = _pq.ParquetFile(path)
                 size = batch_rows if batch_rows > 0 else max(1, pf.metadata.num_rows)
                 for rb in pf.iter_batches(batch_size=size, columns=["doc_id", "tokens", "source"]):
@@ -259,8 +294,8 @@ def parquet_scan(df: DataFrame) -> tuple[list[str] | None, str | None]:
         return None, f"{len(files)} files, over the 200000-file limit"
     paths = []
     for f in files:
-        if f.startswith("file://"):
-            paths.append(f[len("file://"):])
+        if f.startswith("file://"):  # a URI: "a b%" is listed as a%20b%25
+            paths.append(unquote(f[len("file://"):]))
         elif f.startswith("/"):
             paths.append(f)
         else:  # object store / non-local scheme: stay on the general path

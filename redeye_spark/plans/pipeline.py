@@ -226,20 +226,22 @@ def run_pipeline(
         ).drop("_part_id")
     # Writer tuning for the events sink (measured at 2 cores / 1.2M rows:
     # ~24 s -> ~21 s for the write job): columns that are unique-ish per
-    # row BY CONSTRUCTION (ids, raw message, per-event timestamps/urls)
-    # gain nothing from parquet dictionary encoding — the writer builds
-    # a dictionary per column chunk only to fall back to plain — and the
-    # default 1 MB page granularity spends measurable CPU on page
-    # flush/headers for wide rows. Dictionaries stay ON for the
-    # genuinely low-cardinality columns (method, protocol, status_code,
-    # source, ua, version, error_kind), which is where they pay at scale.
+    # row BY CONSTRUCTION (ids, raw message, per-event timestamps, hosts,
+    # sizes) gain nothing from parquet dictionary encoding — the writer
+    # builds a dictionary per column chunk only to fall back to plain —
+    # and the default 1 MB page granularity spends measurable CPU on page
+    # flush/headers for wide rows. Dictionaries stay ON for the columns
+    # that repeat: method, protocol, status_code, source, ua, version,
+    # error_kind, and the URLs, which are not unique per row (120 and 10
+    # distinct requested_url / requested_uri values in the 60k-row
+    # benchmark table; a chunk whose dictionary outgrows its page falls
+    # back to plain by itself).
     events_writer_options = {
         **{
             f"parquet.enable.dictionary#{c}": "false"
             for c in (
                 "doc_id", "message", "timestamp_str", "timestamp",
-                "remote_host", "requested_url", "requested_uri",
-                "content_length",
+                "remote_host", "content_length",
             )
         },
         "parquet.page.size": str(4 * 1024 * 1024),

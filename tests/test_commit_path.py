@@ -2,9 +2,13 @@
 are the same commit, so their sinks, counts and Spark jobs agree, and a
 resume refuses a config that would change the output."""
 
+import glob
 import json
+import os
 
 import pandas as pd
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 import pytest
 
 from redeye_spark.functions.logparse import FORMAT_COMBINED, FORMAT_COMMON
@@ -48,6 +52,38 @@ def test_plain_run_equals_chunked_run(spark, raw, tmp_path):
     # both report per-partition rows and errors from the write itself
     assert sum(p["rows"] for p in res.partitions) == res.rows_in
     assert sum(p["err"] for p in res.partitions) == res.rows_err
+    _assert_sink_format(plain_io)
+
+
+_DICTIONARY = {"PLAIN_DICTIONARY", "RLE_DICTIONARY"}
+
+
+def _assert_sink_format(io):
+    """Every sink file is zstd Parquet. The URL columns are dictionary
+    encoded wherever their values repeat (the writer itself falls back to
+    plain where a dictionary would not pay); doc_id and message, unique
+    per row, are not."""
+    repeating = 0
+    for table in ("events", "agg_counts"):
+        files = glob.glob(os.path.join(io.location(table), "**", "*.parquet"), recursive=True)
+        assert files, table
+        for f in files:
+            pf = pq.ParquetFile(f)
+            meta = pf.metadata
+            for rg in range(meta.num_row_groups):
+                for c in range(meta.num_columns):
+                    chunk = meta.row_group(rg).column(c)
+                    name = chunk.path_in_schema
+                    assert chunk.compression == "ZSTD", (f, name)
+                    dictionary = bool(_DICTIONARY & set(chunk.encodings))
+                    if name in ("requested_url", "requested_uri"):
+                        values = pf.read_row_group(rg, columns=[name]).column(0).drop_null()
+                        if len(values) and len(values) >= 2 * pc.count_distinct(values).as_py():
+                            repeating += 1
+                            assert dictionary, (f, name, chunk.encodings)
+                    elif name in ("doc_id", "message"):
+                        assert not dictionary, (f, name, chunk.encodings)
+    assert repeating
 
 
 def test_chunk_commit_launches_no_extra_jobs(spark, raw, tmp_path, monkeypatch):

@@ -494,6 +494,15 @@ class TestColumnarSourceFastPath:
         write_input_table(d, 2000, fmt=FORMAT_COMBINED, seed=13, chunk=500)
         return d
 
+    @pytest.fixture(scope="class")
+    def small_files(self, tmp_path_factory):
+        from redeye_spark.sources.datagen import write_input_table
+
+        # Spark lists this directory as the URI ".../small%20files%20100%25"
+        d = str(tmp_path_factory.mktemp("fastpath") / "small files 100%")
+        write_input_table(d, 2400, fmt=FORMAT_COMBINED, seed=17, chunk=200)
+        return d
+
     def test_detection_fires_on_bare_scan_only(self, spark, corpus_dir, gen):
         raw = spark.read.parquet(corpus_dir)
         files = parse_op.parquet_scan_files(raw)
@@ -505,21 +514,24 @@ class TestColumnarSourceFastPath:
         assert parse_op.parquet_scan_files(mem) is None
 
     @pytest.mark.parametrize("carry", [False, True])
-    def test_rows_identical_to_general_path(self, spark, corpus_dir, carry):
-        raw = spark.read.parquet(corpus_dir)
-        general = parse_op.parse_sequences(
-            raw, fmt=FORMAT_COMBINED, carry_tokens=carry
-        ).toPandas()
-        fast = parse_op.parse_sequence_files(
-            spark, parse_op.parquet_scan_files(raw),
-            fmt=FORMAT_COMBINED, carry_tokens=carry,
-        ).toPandas()
-        for df in (general, fast):
-            if carry:
-                df["tokens"] = df["tokens"].map(tuple)
-        g = general.sort_values("doc_id").reset_index(drop=True)
-        f = fast.sort_values("doc_id").reset_index(drop=True)
-        pd.testing.assert_frame_equal(g, f)
+    def test_rows_identical_to_general_path(self, spark, corpus_dir, small_files, carry):
+        # 4 files of 500 rows (a task each) and 12 of 200 (packed 3 to a task)
+        for corpus in (corpus_dir, small_files):
+            raw = spark.read.parquet(corpus)
+            general = parse_op.parse_sequences(
+                raw, fmt=FORMAT_COMBINED, carry_tokens=carry
+            ).toPandas()
+            fast = parse_op.parse_sequence_files(
+                spark, parse_op.parquet_scan_files(raw),
+                fmt=FORMAT_COMBINED, carry_tokens=carry,
+            ).toPandas()
+            assert fast["doc_id"].is_unique
+            for df in (general, fast):
+                if carry:
+                    df["tokens"] = df["tokens"].map(tuple)
+            g = general.sort_values("doc_id").reset_index(drop=True)
+            f = fast.sort_values("doc_id").reset_index(drop=True)
+            pd.testing.assert_frame_equal(g, f)
 
     def test_build_tagged_uses_fast_path_for_parquet_scan(self, spark, corpus_dir):
         from redeye_spark.plans.pipeline import PipelineConfig, build_tagged
@@ -531,3 +543,30 @@ class TestColumnarSourceFastPath:
         # fast path: no parquet Scan feeding MapInArrow — the paths
         # relation replaces it
         assert "Scan parquet" not in plan, plan
+
+    def test_small_files_pack_into_tasks_by_the_split_rule(self, spark, small_files, tmp_path):
+        """12 small files are packed by Spark's split rule into at most one
+        task per core, each read once; a file over the split cap is a task
+        of its own; the packed tasks' counts still cover every row."""
+        files = parse_op.parquet_scan_files(spark.read.parquet(small_files))
+        assert len(files) == 12
+        tasks = parse_op.file_tasks(spark, files)
+        assert len(tasks) <= spark.sparkContext.defaultParallelism
+        assert sorted(f for t in tasks for f in t) == sorted(files)
+        assert parse_op.parquet_files(spark, files)[0].rdd.getNumPartitions() == len(tasks)
+
+        key = "spark.sql.files.maxPartitionBytes"
+        spark.conf.set(key, str(min(os.path.getsize(f) for f in files) - 1))
+        try:
+            assert sorted(parse_op.file_tasks(spark, files)) == sorted([f] for f in files)
+            assert parse_op.parquet_files(spark, files)[0].rdd.getNumPartitions() == len(files)
+        finally:
+            spark.conf.unset(key)
+
+        res = run_pipeline(
+            spark, spark.read.parquet(small_files), ParquetIO(str(tmp_path)),
+            PipelineConfig(fmt=FORMAT_COMBINED),
+        )
+        assert (res.parse_path, res.rows_in) == ("parquet_files", 2400)
+        assert len(res.partitions) <= spark.sparkContext.defaultParallelism
+        assert sum(p["rows"] for p in res.partitions) == res.rows_in

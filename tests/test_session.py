@@ -1,7 +1,9 @@
-"""Session sizing from the host: the default heap fits the machine, and a
-requested heap that does not fit is refused before any JVM starts."""
+"""Session sizing from the host: the default heap fits the machine, a
+requested heap that does not fit is refused before any JVM starts, and
+spill goes where Spark puts it, not into RAM."""
 
 import pytest
+from pyspark.sql import SparkSession
 
 from redeye_spark import session
 
@@ -38,3 +40,33 @@ def test_a_heap_larger_than_ram_is_refused(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", f"{2 * ram_gib + 2}g")
     with pytest.raises(ValueError, match="does not fit in this host's"):
         session.get_spark("too-big", master="local[1]")
+
+
+def test_spill_is_not_put_in_ram(monkeypatch):
+    """get_spark sets no spark.local.dir of its own (spill on a tmpfs
+    lands in the RAM the heap check never counts); an explicit one still
+    wins. The builder's config is captured, so no JVM starts."""
+
+    class Started(Exception):
+        pass
+
+    seen = {}
+
+    def config(self, key=None, value=None, conf=None, map=None):
+        seen[key] = value
+        return self
+
+    def get_or_create(self):
+        raise Started
+
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    monkeypatch.setattr(SparkSession.Builder, "config", config)
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", get_or_create)
+    with pytest.raises(Started):
+        session.get_spark("no-spill-dir", master="local[1]")
+    assert "spark.local.dir" not in seen
+    assert seen["spark.sql.parquet.compression.codec"] == "zstd"
+    seen.clear()
+    with pytest.raises(Started):
+        session.get_spark("spill-dir", master="local[1]", extra_conf={"spark.local.dir": "/spill"})
+    assert seen["spark.local.dir"] == "/spill"
