@@ -54,16 +54,41 @@ def test_plain_run_equals_chunked_run(spark, raw, tmp_path):
     assert sum(p["err"] for p in res.partitions) == res.rows_err
     _assert_sink_format(plain_io)
 
+    # a run whose first chunk an older build committed with INT96
+    # timestamps resumes under the INT64 default and reads back the same
+    key = "spark.sql.parquet.outputTimestampType"
+    mixed_io, mixed_ckpt = ParquetIO(str(tmp_path / "mixed")), str(tmp_path / "ck_mixed")
+    before = spark.conf.get(key)
+    spark.conf.set(key, "INT96")
+    try:
+        with pytest.raises(RuntimeError, match="injected failure"):
+            ck.run_checkpointed(spark, raw, mixed_io, mixed_ckpt, cfg, n_chunks=3, fail_after=1)
+    finally:
+        spark.conf.set(key, before)
+    ck.run_checkpointed(spark, raw, mixed_io, mixed_ckpt, cfg, n_chunks=3)
+    files = glob.glob(os.path.join(mixed_io.location("events"), "**", "*.parquet"), recursive=True)
+    schemas = [pq.ParquetFile(f).schema for f in files]
+    assert {s.column(s.names.index("timestamp")).physical_type for s in schemas} == {"INT96", "INT64"}
+    mixed = mixed_io.read(spark, "events").drop("chunk_id").toPandas()
+    pd.testing.assert_frame_equal(_sorted(mixed[plain.columns], "doc_id"), _sorted(plain, "doc_id"))
+    final = final_counts(spark, mixed_io).toPandas()[agg.columns]
+    pd.testing.assert_frame_equal(_sorted(final, AGG_KEY), _sorted(agg, AGG_KEY))
+
 
 _DICTIONARY = {"PLAIN_DICTIONARY", "RLE_DICTIONARY"}
+
+
+_TIMESTAMPS = {("events", "timestamp"), ("agg_counts", "bucket")}
 
 
 def _assert_sink_format(io):
     """Every sink file is zstd Parquet. The URL columns are dictionary
     encoded wherever their values repeat (the writer itself falls back to
     plain where a dictionary would not pay); doc_id and message, unique
-    per row, are not."""
-    repeating = 0
+    per row, are not. Timestamps are Iceberg's INT64 UTC microseconds,
+    with the min/max statistics a time filter prunes on (Spark's INT96
+    default carries none)."""
+    repeating = timestamps = 0
     for table in ("events", "agg_counts"):
         files = glob.glob(os.path.join(io.location(table), "**", "*.parquet"), recursive=True)
         assert files, table
@@ -83,7 +108,17 @@ def _assert_sink_format(io):
                             assert dictionary, (f, name, chunk.encodings)
                     elif name in ("doc_id", "message"):
                         assert not dictionary, (f, name, chunk.encodings)
-    assert repeating
+                    elif (table, name) in _TIMESTAMPS:
+                        logical = json.loads(meta.schema.column(c).logical_type.to_json())
+                        assert chunk.physical_type == "INT64", (f, name, chunk.physical_type)
+                        assert logical["Type"] == "Timestamp", (f, name, logical)
+                        assert logical["isAdjustedToUTC"] and logical["timeUnit"] == "microseconds", (f, name, logical)
+                        stats = chunk.statistics
+                        assert stats is not None, (f, name)
+                        if stats.num_values:  # an all-null chunk has no min or max
+                            timestamps += 1
+                            assert stats.has_min_max, (f, name)
+    assert repeating and timestamps
 
 
 def test_chunk_commit_launches_no_extra_jobs(spark, raw, tmp_path, monkeypatch):

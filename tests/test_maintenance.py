@@ -133,41 +133,45 @@ class TestClusteredCompaction:
         """cluster_by on an unpartitioned table must range-partition +
         sort the rewrite so each output file owns a disjoint value
         range of the key — asserted from the REAL parquet footers, the
-        stats a selective scan prunes on."""
+        stats a selective scan prunes on. The timestamp key holds only
+        if timestamps are written with statistics (INT64, not INT96)."""
+        import os
+
         import pyarrow.parquet as pq
 
         from redeye_spark.plans.maintenance import compact_table
         from redeye_spark.sources.io import ParquetIO
 
-        io = ParquetIO(str(tmp_path))
-        # 12 small files of interleaved keys: every file spans the whole
-        # key range, so before compaction NO file is prunable
-        df = spark.range(12_000).selectExpr(
-            "id % 1000 AS k", "id AS v"
-        ).repartition(12)
-        io.write(df, "t", mode="overwrite")
-        stats = compact_table(
-            spark, io, "t", target_file_bytes=20_000, cluster_by=["k"]
-        )
-        assert stats["rewritten"] and stats["files_after"] > 1
+        for name, key in (("long", "id % 1000"), ("timestamp", "timestamp_seconds(id % 1000)")):
+            io = ParquetIO(str(tmp_path / name))
+            # 12 small files of interleaved keys: every file spans the whole
+            # key range, so before compaction NO file is prunable
+            df = spark.range(12_000).selectExpr(
+                f"{key} AS k", "id AS v"
+            ).repartition(12)
+            io.write(df, "t", mode="overwrite")
+            stats = compact_table(
+                spark, io, "t", target_file_bytes=20_000, cluster_by=["k"]
+            )
+            assert stats["rewritten"] and stats["files_after"] > 1
 
-        ranges = []
-        root = io.location("t")
-        import os as _os
-        for f in sorted(_os.listdir(root)):
-            if not f.endswith(".parquet"):
-                continue
-            md = pq.ParquetFile(_os.path.join(root, f)).metadata
-            mins, maxs = [], []
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(0).statistics
-                mins.append(st.min); maxs.append(st.max)
-            ranges.append((min(mins), max(maxs)))
-        ranges.sort()
-        for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-            assert lo2 >= hi1, f"overlapping file ranges {ranges}"
-        # rows preserved
-        assert io.read(spark, "t").count() == 12_000
+            ranges = []
+            root = io.location("t")
+            for f in sorted(os.listdir(root)):
+                if not f.endswith(".parquet"):
+                    continue
+                md = pq.ParquetFile(os.path.join(root, f)).metadata
+                mins, maxs = [], []
+                for rg in range(md.num_row_groups):
+                    st = md.row_group(rg).column(0).statistics
+                    assert st is not None and st.has_min_max, (name, f)
+                    mins.append(st.min); maxs.append(st.max)
+                ranges.append((min(mins), max(maxs)))
+            ranges.sort()
+            for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
+                assert lo2 >= hi1, f"overlapping {name} file ranges {ranges}"
+            # rows preserved
+            assert io.read(spark, "t").count() == 12_000
 
     def test_cluster_by_with_partitions_sorts_within(self, spark, tmp_path):
         from redeye_spark.plans.maintenance import compact_table

@@ -45,7 +45,8 @@ def test_a_heap_larger_than_ram_is_refused(monkeypatch):
 def test_spill_is_not_put_in_ram(monkeypatch):
     """get_spark sets no spark.local.dir of its own (spill on a tmpfs
     lands in the RAM the heap check never counts); an explicit one still
-    wins. The builder's config is captured, so no JVM starts."""
+    wins. The sink format (zstd level 6, INT64 timestamps) is session
+    conf. The builder's config is captured, so no JVM starts."""
 
     class Started(Exception):
         pass
@@ -66,6 +67,8 @@ def test_spill_is_not_put_in_ram(monkeypatch):
         session.get_spark("no-spill-dir", master="local[1]")
     assert "spark.local.dir" not in seen
     assert seen["spark.sql.parquet.compression.codec"] == "zstd"
+    assert seen["spark.hadoop.parquet.compression.codec.zstd.level"] == "6"
+    assert seen["spark.sql.parquet.outputTimestampType"] == "TIMESTAMP_MICROS"
     seen.clear()
     with pytest.raises(Started):
         session.get_spark("spill-dir", master="local[1]", extra_conf={"spark.local.dir": "/spill"})
