@@ -7,7 +7,7 @@ rule. Example:
 
     spark-submit --py-files redeye_spark.zip -m redeye_spark.job \
         --combined-format --input /data/raw --output /data/out \
-        --parallelism 256 --checkpoint-dir /data/ckpt --resume
+        --checkpoint-dir /data/ckpt --resume
 
 Stats print as one JSON line on stdout; warnings (dead-letter counts)
 go to stderr like the reference's handle_redeye_error.
@@ -43,15 +43,19 @@ def build_arg_parser() -> argparse.ArgumentParser:
              "lines, then extract fields JVM-side; rows that do not match land "
              "with grok_match=false instead of the fixed-format taxonomy",
     )
-    p.add_argument("--input", required=True, help="input table path (tokenized sequences)")
+    p.add_argument("--input", required=True,
+                   help="input path: a tokenized-sequence parquet table, or raw "
+                        ".log files under --text-input")
     p.add_argument("--output", required=True, help="output base dir / catalog namespace")
-    p.add_argument("--parallelism", type=int, default=None, help="explicit repartition width before the parse UDF")
+    p.add_argument("--parallelism", type=int, default=None,
+                   help="text input: the byte ranges local plain files are cut into (default: "
+                        "the session's parallelism); parquet input: a repartition before the "
+                        "parse, which costs an exchange and the per-task file-read fast path")
     p.add_argument("--checkpoint-dir", default=None, help="enable chunked checkpoint/resume")
-    p.add_argument("--chunks", type=int, default=8, help="checkpoint chunk count")
+    p.add_argument("--chunks", type=int, default=None, help="checkpoint chunk count (default 8)")
     p.add_argument("--chunk-by", default=None,
                    help="partition column for pushdown-able chunking (default: doc_id hash)")
     p.add_argument("--resume", action="store_true", help="skip chunks already complete in the manifest")
-    p.add_argument("--salt-buckets", type=int, default=16)
     p.add_argument("--bucket", default="hour", choices=["minute", "hour", "day"])
     p.add_argument(
         "--arrow-batch-rows", type=int, default=None,
@@ -80,8 +84,9 @@ def build_arg_parser() -> argparse.ArgumentParser:
 def main(argv: list[str] | None = None) -> int:
     p = build_arg_parser()
     args = p.parse_args(argv)
-    if args.chunk_by and not args.checkpoint_dir:
-        p.error("--chunk-by requires --checkpoint-dir (chunking is the checkpoint unit)")
+    # without a manifest, a plain commit would overwrite a checkpointed run's chunks
+    if not args.checkpoint_dir and (args.chunk_by or args.chunks is not None or args.resume):
+        p.error("--chunks, --chunk-by and --resume require --checkpoint-dir")
     if args.grok and args.checkpoint_dir:
         p.error("--grok does not support --checkpoint-dir (chunked resume is "
                 "a fixed-format pipeline feature)")
@@ -98,15 +103,9 @@ def main(argv: list[str] | None = None) -> int:
         )
     cfg = PipelineConfig(
         fmt=FORMAT_COMBINED if args.combined_format else FORMAT_COMMON,
-        # text mode: local uncompressed files are cut into this many byte
-        # ranges, each read by its parse task; a local .gz/.bz2 file is
-        # one task's piece, and other files (object stores, other codecs)
-        # add one row per file to the same parse stage: each of these is
-        # parsed by one task
         num_partitions=args.parallelism
         or (spark.sparkContext.defaultParallelism if args.text_input else None),
         bucket_granularity=args.bucket,
-        salt_buckets=args.salt_buckets,
     )
     io = resolve_io(spark, args.output)
     if args.grok:
@@ -165,7 +164,7 @@ def main(argv: list[str] | None = None) -> int:
             io.delete(spark, "agg_counts")
         manifest = run_checkpointed(
             spark, raw, io, args.checkpoint_dir, cfg,
-            n_chunks=args.chunks, chunk_by=args.chunk_by,
+            n_chunks=8 if args.chunks is None else args.chunks, chunk_by=args.chunk_by,
         )
         res, extra = manifest_result(manifest), {"chunks": len(manifest["chunks"])}
     else:

@@ -168,8 +168,8 @@ def run_checkpointed(
     # The run's identity; a resume must match it. Another chunking
     # double- and under-writes rows, and another output-changing config
     # mixes two outputs in the sinks (hour and day buckets in one
-    # agg_counts); the salt changes no output. A key an older manifest
-    # lacks reads as None: no chunk_by is hash mode, no config is refused.
+    # agg_counts). A key an older manifest lacks reads as None: no
+    # chunk_by is hash mode, no config is refused.
     identity = {
         "n_chunks": n_chunks,
         "chunk_by": chunk_by,

@@ -21,8 +21,8 @@ single mapInArrow parse inside whole-stage codegen:
   write partitionBy(sink)               — single pass over the data; the
                                           per-sink and per-partition
                                           counts ride it (df.observe)
-  groupBy(sink,bucket,keys).count()     — salted, over the committed sink,
-                                          under the session's AQE
+  groupBy(sink,bucket,keys).count()     — one exchange over the committed
+                                          sink, under the session's AQE
 
 run_pipeline is the one commit function: a plain run is the case with
 no chunk id, and each chunk of plans.checkpoint.run_checkpointed is the
@@ -36,6 +36,7 @@ from __future__ import annotations
 import time
 from collections import Counter
 from dataclasses import dataclass, field
+from typing import ClassVar
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -58,7 +59,7 @@ class PipelineConfig:
     num_partitions: int | None = None
     carry_tokens: bool = False  # True only when the invariant is checked inline
     bucket_granularity: str = "hour"
-    salt_buckets: int = 16
+    salt_buckets: ClassVar[int] = 16  # not an option: read only by perfbench's replay, deleted with it (ROADMAP item 2)
     routes: list = field(default_factory=lambda: list(route_op.DEFAULT_ROUTES))
 
     def route_names(self) -> list[str]:
@@ -187,8 +188,8 @@ def run_pipeline(
         events_by, agg_by, mode = ["chunk_id", "sink"], ["chunk_id"], "overwrite_partitions"
     # No persist: the committed events table IS the reuse point. The parse
     # UDF runs exactly once (the sink write); the aggregate pass re-reads
-    # the columnar sink with column pruning (5 narrow columns), which at
-    # any scale beats caching the full wide stream on-heap.
+    # 5 columns of the columnar sink (6 chunked, see below), which at any
+    # scale beats caching the full wide stream on-heap.
     parsed, parse_path, fallback_reason = parse_input(spark, raw, cfg)
     tagged = tag_parsed(parsed, cfg, source_dim).select("*", *chunk_cols)
     # Per-sink and per-partition counters ride the sink-write job itself
@@ -255,12 +256,11 @@ def run_pipeline(
     io.write(tagged, events_table, mode=mode, partition_by=events_by,
              options=events_writer_options)
 
-    # The aggregate pass reads 4 narrow columns of the committed events
-    # table, passing the writer's schema (no footer-sampling inference
-    # job), under the session's own AQE: it coalesces the reduce side
-    # to the few partitions the partial counts need.
+    # The aggregate pass reads sink, timestamp, status_class, method and
+    # source (and chunk_id) of the committed events, with the writer's
+    # schema (no inference job), under the session's AQE: one exchange.
     events_back = io.read(spark, events_table, schema=tagged.schema).filter(in_chunk)
-    counts = agg_op.salted_counts(events_back, cfg.bucket_granularity, cfg.salt_buckets)
+    counts = agg_op.sink_counts(events_back, cfg.bucket_granularity)
     io.write(counts.select("*", *chunk_cols), agg_table, mode=mode, partition_by=agg_by)
 
     partitions = None

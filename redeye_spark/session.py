@@ -5,9 +5,9 @@ The Arrow batch size is the Spark analog of redeye's --input-buffer
 (src/bin/redeye.rs:47-53): it bounds the unit of work crossing the
 JVM→Python boundary. AQE is on for runtime coalesce + skew-join
 splitting, and the pipeline runs under it as configured here (it sets
-no session conf of its own); hot-key *aggregation* skew is additionally
-handled by explicit salting in operators/aggregate.py (north_rule
-requires explicit skew mitigation). File scans keep Spark's default
+no session conf of its own). A count needs no salt for a hot key: its
+map-side partial aggregate sends at most one row per map task to the
+reducer (operators/aggregate.py). File scans keep Spark's default
 split size: both parse fast paths read their own files, and the
 parquet one packs them into tasks by Spark's own split rule.
 

@@ -92,9 +92,13 @@ def test_checkpointed_stats_carry_plain_run_keys(raw_dir, capsys):
 
 
 def test_chunk_by_requires_checkpoint_dir(capsys):
-    with pytest.raises(SystemExit):
-        job_mod.main(["--combined-format", "--input", "i", "--output", "o",
-                      "--chunk-by", "source"])
+    """Each chunking flag without --checkpoint-dir is refused before any
+    session starts: a silent plain commit would overwrite the chunks an
+    earlier checkpointed run's manifest still marks complete."""
+    for flag in (["--chunk-by", "source"], ["--resume"], ["--chunks", "8"]):
+        with pytest.raises(SystemExit):
+            job_mod.main(["--combined-format", "--input", "i", "--output", "o", *flag])
+        assert "--resume require --checkpoint-dir" in capsys.readouterr().err
 
 
 def test_grok_mode_extracts_fields(spark, raw_dir, capsys):

@@ -151,11 +151,26 @@ def test_chunk_commit_launches_no_extra_jobs(spark, raw, tmp_path, monkeypatch):
     assert 0 < chunk <= plain
 
 
+def _write_plan_nodes(spark, table_path: str) -> list[str]:
+    """Node descriptions of the executed plan (AQE's final plan) of the
+    latest SQL execution that wrote ``table_path``, from the SQL status
+    store."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    for e in (execs.apply(i) for i in reversed(range(execs.size()))):
+        nodes = store.planGraph(e.executionId()).allNodes()
+        descs = [nodes.apply(i).desc() for i in range(nodes.size())]
+        if any(d.startswith(f"Execute InsertIntoHadoopFsRelationCommand file:{table_path},") for d in descs):
+            return descs
+    raise AssertionError(f"no SQL execution wrote {table_path}")
+
+
 def test_aggregate_runs_under_the_session_aqe(spark, raw, tmp_path):
     """run_pipeline sets no conf around its aggregate pass: at 200
-    shuffle partitions the session's AQE coalesces the salted aggregate,
-    so the table has at most one file per core, and its rows equal a
-    4-partition run's."""
+    shuffle partitions the session's AQE coalesces the single-phase
+    aggregate (one hash exchange, no salt), so the table has at most one
+    file per core, and its rows equal a 4-partition run's."""
     key = "spark.sql.shuffle.partitions"
     cfg = PipelineConfig(fmt=FORMAT_COMBINED)
     before = spark.conf.get(key)
@@ -171,6 +186,9 @@ def test_aggregate_runs_under_the_session_aqe(spark, raw, tmp_path):
     files = list((tmp_path / "200" / "agg_counts").glob("part-*.parquet"))
     assert 0 < len(files) <= spark.sparkContext.defaultParallelism, len(files)
     pd.testing.assert_frame_equal(_sorted(tables[200], AGG_KEY), _sorted(tables[4], AGG_KEY))
+    nodes = _write_plan_nodes(spark, str(tmp_path / "200" / "agg_counts"))
+    assert len([d for d in nodes if d.startswith("Exchange hashpartitioning(")]) == 1, nodes
+    assert not [d for d in nodes if "xxhash64" in d], nodes
 
 
 def test_resume_refuses_a_config_that_changes_the_output(spark, raw, tmp_path):
@@ -186,8 +204,7 @@ def test_resume_refuses_a_config_that_changes_the_output(spark, raw, tmp_path):
     ):
         with pytest.raises(ValueError, match="resume with config="):
             ck.run_checkpointed(spark, raw, io, ckpt, changed, n_chunks=2)
-    # the salt spreads the aggregate's work but changes no result
-    m = ck.run_checkpointed(spark, raw, io, ckpt, PipelineConfig(fmt=FORMAT_COMBINED, salt_buckets=4), n_chunks=2)
+    m = ck.run_checkpointed(spark, raw, io, ckpt, cfg, n_chunks=2)
     assert all(c["status"] == "complete" for c in m["chunks"].values())
     assert "salt_buckets" not in json.dumps(m)
 
